@@ -23,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from pandas_plus_spark.session import get_spark  # noqa: E402
+from pandas_plus_spark.util import release_cached  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -97,7 +98,49 @@ HEADLINE = [
 ]
 
 
-def warm_session(spark, sf_dir: str, qs: dict) -> None:
+# Non-headline registry queries that warm the hash-aggregate and
+# partitioned-window shapes (see warm_session).
+WARMERS = ("group_minmax", "shift")
+
+
+def resolve(name: str):
+    """The registry callable for query ``name``.
+
+    The r10 registry consolidation folded some former entries into
+    compound gates; the harness keeps pricing the original query shapes
+    (name continuity across BENCH_r*.json) via the module-level
+    ``_q_<name>`` callables, which the compounds themselves still
+    execute."""
+    import __spark_entry__ as entry_mod
+
+    fn = entry_mod.queries().get(name) or getattr(entry_mod, "_q_" + name, None)
+    if fn is None:
+        raise KeyError(f"no registry query or _q_ callable named {name!r}")
+    return fn
+
+
+def noop(df) -> None:
+    """Materialize ``df`` through the noop sink: every output column is
+    computed (no projection pruning, unlike ``count()``), nothing lands on
+    disk."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, sf_dir: str, name: str) -> float:
+    """Seconds to build and noop-sink query ``name`` (rounded to 0.1 ms).
+    The operator-persisted intermediates are released afterwards — the
+    documented caller contract — so one query's caches never pressure the
+    next; the release is not timed."""
+    fn = resolve(name)
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    noop(df)
+    elapsed = round(time.perf_counter() - t0, 4)
+    release_cached(df)
+    return elapsed
+
+
+def warm_session(spark, sf_dir: str) -> None:
     """Warm the ENGINE INFRASTRUCTURE, never the priced plans: the r8
     decomposition (BASELINE.md) measured the 47-query sf1 suite at 119 s
     in a cold session vs 95 s with a hot JVM vs 70 s with per-plan codegen
@@ -119,35 +162,30 @@ def warm_session(spark, sf_dir: str, qs: dict) -> None:
     tabs = load_tables(spark, sf_dir)
     for df in tabs.values():
         df.count()
-    spark.range(1000).selectExpr("sum(id) as s").write.format("noop").mode(
-        "overwrite").save()
+    noop(spark.range(1000).selectExpr("sum(id) as s"))
     # hash aggregate + partitioned window via non-headline registry queries
-    for warm_q in ("group_minmax", "shift"):
-        qs[warm_q](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    for warm_q in WARMERS:
+        noop(resolve(warm_q)(spark, sf_dir))
     li = tabs["lineitem"]
     # shuffle join + sort (ad-hoc: keys/filters differ from every priced query)
-    (li.select("l_orderkey", "l_partkey", "l_quantity")
-       .join(tabs["orders"].select("o_orderkey", "o_custkey"),
-             F.col("l_orderkey") == F.col("o_orderkey"))
-       .groupBy("o_custkey").agg(F.sum("l_quantity").alias("q"))
-       .orderBy(F.desc("q")).limit(10)
-       .write.format("noop").mode("overwrite").save())
+    noop(li.select("l_orderkey", "l_partkey", "l_quantity")
+         .join(tabs["orders"].select("o_orderkey", "o_custkey"),
+               F.col("l_orderkey") == F.col("o_orderkey"))
+         .groupBy("o_custkey").agg(F.sum("l_quantity").alias("q"))
+         .orderBy(F.desc("q")).limit(10))
     # pivot
-    (li.groupBy("l_linestatus").pivot("l_returnflag")
-       .agg(F.count(F.lit(1))).write.format("noop").mode("overwrite").save())
+    noop(li.groupBy("l_linestatus").pivot("l_returnflag")
+         .agg(F.count(F.lit(1))))
     # explode/HOF text shape
-    (tabs["documents"].select(F.explode(F.split("text", " ")).alias("w"))
-       .groupBy("w").count().orderBy(F.desc("count")).limit(5)
-       .write.format("noop").mode("overwrite").save())
+    noop(tabs["documents"].select(F.explode(F.split("text", " ")).alias("w"))
+         .groupBy("w").count().orderBy(F.desc("count")).limit(5))
     # Python/Arrow worker pool: one applyInPandas and one mapInPandas, with
     # enough partitions that every core's worker forks + imports pandas now
     ev = (tabs["events"].select("user_id", "value")
           .limit(100_000).repartition(64))
-    (ev.groupBy("user_id")
-       .applyInPandas(lambda p: p, schema="user_id long, value double")
-       .write.format("noop").mode("overwrite").save())
-    (ev.mapInPandas(lambda it: it, schema="user_id long, value double")
-       .write.format("noop").mode("overwrite").save())
+    noop(ev.groupBy("user_id")
+         .applyInPandas(lambda p: p, schema="user_id long, value double"))
+    noop(ev.mapInPandas(lambda it: it, schema="user_id long, value double"))
 
 
 def main() -> None:
@@ -155,41 +193,12 @@ def main() -> None:
     spark = get_spark(app_name="pandas-plus-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entry_mod
-
-    registry = entry_mod.queries()
-
-    # The r10 registry consolidation folded some former entries into
-    # compound gates; the bench keeps pricing the original query shapes
-    # (name continuity across BENCH_r*.json) via the module-level
-    # callables, which the compounds themselves still execute.
-    def q(name):
-        return registry.get(name) or getattr(entry_mod, "_q_" + name)
-
-    qs = {name: q(name) for name in HEADLINE}
-    qs["group_minmax"] = registry["group_minmax"]
-    qs["shift"] = q("shift")
-
-    warm_session(spark, sf_dir, qs)
+    warm_session(spark, sf_dir)
     # layout-backed queries: build the standing artifact (stored dedup
     # index) during warmup so the timed run measures the steady state
-    q("incremental_dedup_indexed")(spark, sf_dir).write.format("noop").mode(
-        "overwrite").save()
+    noop(resolve("incremental_dedup_indexed")(spark, sf_dir))
 
-    from pandas_plus_spark.util import release_cached
-
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qs[name]
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        # noop sink: forces evaluation of EVERY output column (no projection
-        # pruning under count), writes nothing.
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 4)
-        # free operator-persisted intermediates (the documented caller
-        # contract) so earlier queries' caches don't pressure later ones
-        release_cached(df)
+    timings = {name: time_query(spark, sf_dir, name) for name in HEADLINE}
     total = round(sum(timings.values()), 4)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(json.dumps({

@@ -161,6 +161,15 @@ def global_row_number(
     # with the cut, both halves consistent) for a planning-only win.
     # Cuts stay on the small-by-construction frames (LSH entries, vocab
     # counts) where the trade runs the other way.
+    #
+    # Fault-tolerance trade: persist() is NOT a barrier against the
+    # boundary hazard above. If a cached block is lost (executor loss,
+    # eviction), Spark recomputes that partition from lineage — which
+    # re-samples the range boundaries, so the recomputed rows can carry a
+    # different __pid than the surviving blocks and the numbering is
+    # silently wrong. A localCheckpoint fails the job loudly instead (see
+    # util.lineage_cut's "not fault-tolerant" note). At cluster scale
+    # these pins want a deterministic partition key.
     local = rp.withColumn(
         "__lrn", F.row_number().over(Window.partitionBy("__pid").orderBy(*cols))
     ).persist()

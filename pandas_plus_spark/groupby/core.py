@@ -53,11 +53,6 @@ from pyspark.sql import types as T
 
 __all__ = ["GroupBy", "NUMERIC_KINDS"]
 
-# Same-boot A/B toggle (r16 optimization protocol): False reverts the ewm
-# lag-1 carry to the r15 aggregate + shifted-key join form in-process, so
-# one boot can time both variants back to back with no code edits.
-_EWM_CARRY_VIA_WINDOW = True
-
 # Value types the reference's numeric kernels accept (reference
 # util.py:504-514 silently drops non-numeric columns before aggregation).
 NUMERIC_KINDS = (
@@ -2073,66 +2068,36 @@ class GroupBy:
         # ratios are scale-invariant, so the common r^(i−(L−1)) factor
         # never needs materializing.
         #
-        # r16 (guide §2.4): the carry is a RANGE [-1,-1] window over the
-        # chunk id — last(__S) over partitionBy(keys).orderBy(__c)
-        # .rangeBetween(-1, -1) reads the previous chunk's LAST cumsum
-        # row, i.e. exactly its total. The r15 form (groupBy(keys, chunk)
-        # totals + shifted-key join) re-embedded the whole scan → sort →
-        # row_number → anchor prefix as a second plan branch: a duplicate
-        # full-data sort, two window passes and a hash aggregate at
-        # runtime (plan: 2 scans / 4 sorts / BroadcastHashJoin). The
-        # window form adds NO sort — its (keys, __c) requirement is a
-        # prefix of the chunk window's (keys, __c, order) — and no join.
-        # Reading the chunk window's own output (not re-summing __z) both
-        # skips redundant adds and makes the carry DEPEND on the chunk
-        # window, which stops the TransposeWindow rule from swapping the
-        # narrower-partitioned carry below it (measured: the independent
-        # sum(__z) form got transposed and re-introduced a 3rd sort).
-        # Doubles are bit-identical: __S's cumsum at the chunk's last row
-        # performs the same in-order additions the hash aggregate did.
-        # The frame only moves when __c changes, so Spark's sliding-frame
-        # recompute costs one buffer scan per chunk, O(n) overall. The
-        # final forward-fill window orders by (__c, order) — the same row
-        # sequence (__c is nondecreasing in order within a group) — so
-        # the whole post-exchange window stack shares two sorts total.
+        # The carry is a RANGE [-1,-1] window over the chunk id:
+        # last(__S) over partitionBy(keys).orderBy(__c) reads the previous
+        # chunk's LAST cumsum row, i.e. exactly its total — no aggregate,
+        # no join, and no second pass over the scan. Reading the chunk
+        # window's own output (not re-summing __z) makes the carry DEPEND
+        # on the chunk window, which stops TransposeWindow from swapping
+        # the narrower-partitioned carry below it.
+        #
+        # Tie-order condition: the carry's (keys, __c) ordering is a prefix
+        # of the chunk window's (keys, __c, order), and the fill window
+        # orders by that same (keys, __c, order) sequence, so neither adds
+        # a Sort — the post-exchange window stack shares two sorts. last()
+        # reads each chunk's full-cumsum row only while no Sort re-orders
+        # the rows that tie on __c (pinned in tests/test_groupby_core.py).
         out = df
         for c in cols:
-            if _EWM_CARRY_VIA_WINDOW:
-                w_carry = (Window.partitionBy(*self._keys)
-                           .orderBy(f"__c_{c}")
-                           .rangeBetween(-1, -1))
-                out = (out.withColumn("__pn", F.last(f"__S_{c}").over(w_carry))
-                       .withColumn("__pw", F.last(f"__W_{c}").over(w_carry)))
-                if want_var:
-                    out = (out.withColumn(
-                        "__pb", F.last(f"__S2_{c}").over(w_carry))
-                        .withColumn(
-                        "__pw2", F.last(f"__W2_{c}").over(w_carry)))
-                w_fill = (Window.partitionBy(*self._keys)
-                          .orderBy(F.col(f"__c_{c}"), *ocols)
-                          .rowsBetween(Window.unboundedPreceding,
-                                       Window.currentRow))
-            else:  # r15 aggregate + shifted-key join (A/B reference)
-                aggs = [F.sum(f"__z_{c}").alias("__tn"),
-                        F.sum(f"__zw_{c}").alias("__tw")]
-                if want_var:
-                    aggs += [F.sum(f"__z2_{c}").alias("__tb"),
-                             F.sum(f"__zw2_{c}").alias("__tw2")]
-                totals = df.groupBy(*self._keys, f"__c_{c}").agg(*aggs)
-                sel = [
-                    *[F.col(k).alias(f"__k_{i}")
-                      for i, k in enumerate(self._keys)],
-                    (F.col(f"__c_{c}") + 1).alias("__nc"),
-                    F.col("__tn").alias("__pn"), F.col("__tw").alias("__pw")]
-                if want_var:
-                    sel += [F.col("__tb").alias("__pb"),
-                            F.col("__tw2").alias("__pw2")]
-                carry = totals.select(*sel)
-                cond = F.col(f"__c_{c}") == F.col("__nc")
-                for i, k in enumerate(self._keys):
-                    cond = cond & F.col(k).eqNullSafe(F.col(f"__k_{i}"))
-                out = out.join(carry, cond, "left")
-                w_fill = w_cum
+            w_carry = (Window.partitionBy(*self._keys)
+                       .orderBy(f"__c_{c}")
+                       .rangeBetween(-1, -1))
+            out = (out.withColumn("__pn", F.last(f"__S_{c}").over(w_carry))
+                   .withColumn("__pw", F.last(f"__W_{c}").over(w_carry)))
+            if want_var:
+                out = (out.withColumn(
+                    "__pb", F.last(f"__S2_{c}").over(w_carry))
+                    .withColumn(
+                    "__pw2", F.last(f"__W2_{c}").over(w_carry)))
+            w_fill = (Window.partitionBy(*self._keys)
+                      .orderBy(F.col(f"__c_{c}"), *ocols)
+                      .rowsBetween(Window.unboundedPreceding,
+                                   Window.currentRow))
             # a chunk whose prefix has no observation yet gives NULL
             # prefix sums (SQL sum-of-nothing) — that is 0 contribution,
             # NOT a null result: the carry alone must flow through

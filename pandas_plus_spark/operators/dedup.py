@@ -691,16 +691,12 @@ def incremental_dedup(
     # descriptions are thread-local so the UI stays labeled per pipeline.
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..util import _LINEAGE_CUT_ENABLED, lineage_cut
-    if _LINEAGE_CUT_ENABLED:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_exact = pool.submit(lineage_cut, exact, True)
-            f_pairs = pool.submit(lineage_cut, pair_raw, True)
-            exact, pair_raw = f_exact.result(), f_pairs.result()
-        extra_cached += [exact, pair_raw]
-    else:  # A/B fallback: the r15 shape (persisted exact, lazy pairs)
-        exact = exact.persist()
-        extra_cached.append(exact)
+    from ..util import lineage_cut
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_exact = pool.submit(lineage_cut, exact, True)
+        f_pairs = pool.submit(lineage_cut, pair_raw, True)
+        exact, pair_raw = f_exact.result(), f_pairs.result()
+    extra_cached += [exact, pair_raw]
     cands = (
         pair_raw
         # exact-matched docs report their exact row only (see docstring):

@@ -76,25 +76,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    # A/B experiment hook (r15 optimization protocol): extra confs as
-    # "k=v;k=v" — lets scripts/bench_pair.py boots differ by exactly one
-    # config without code edits. Production settings graduate into the
-    # explicit defaults above once a same-boot A/B justifies them.
-    # Honored only with explicit opt-in (SPARK_GRAFT_AB=1) so a stray
-    # leftover env var can't silently reconfigure a normal boot; malformed
-    # entries (no '=') are skipped; applied overrides are logged.
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    if extra and os.environ.get("SPARK_GRAFT_AB") == "1":
-        for kv in filter(None, (s.strip() for s in extra.split(";"))):
-            k, _, v = kv.partition("=")
-            if not _ or not k.strip():
-                print(f"[get_spark] skipping malformed extra conf {kv!r}")
-                continue
-            print(f"[get_spark] A/B override: {k.strip()}={v.strip()}")
-            builder = builder.config(k.strip(), v.strip())
-    elif extra:
-        print("[get_spark] SPARK_GRAFT_EXTRA_CONF set but SPARK_GRAFT_AB"
-              " != 1 — ignoring (A/B hook requires explicit opt-in)")
     if rocksdb_state_store:
         builder = builder.config(
             "spark.sql.streaming.stateStore.providerClass",

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import warnings
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
@@ -45,12 +48,6 @@ def parallel_filter(df: DataFrame, cond, min_partitions: int | None = None) -> D
     return df.filter(cond)
 
 
-# Same-boot A/B toggle (r16 optimization protocol): False reverts every
-# lineage_cut site to the r15 persist() behavior in-process, so one boot
-# can time both variants back to back with no code edits.
-_LINEAGE_CUT_ENABLED = True
-
-
 def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialize-once like ``persist()``, but ALSO truncate the logical
     plan at this point (``localCheckpoint``, guide §3.3/§5).
@@ -85,16 +82,26 @@ def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     fault-tolerant — a lost executor fails the job instead of recomputing
     the segment. Right for the small-by-construction reused frames the
     engine cuts (signatures, bucket entries, candidate pairs); wrong for
-    giant intermediates where persist()'s recompute-on-loss matters.
+    giant intermediates where persist()'s recompute-on-loss matters. The
+    converse holds for persist(): a recomputed partition is re-derived
+    from its lineage, so a persisted frame built on a nondeterministic
+    step (a sampled ``repartitionByRange``, ``spark_partition_id``) can
+    come back with different contents than its surviving partitions —
+    see the pins in ``functions/ordered.py``.
     """
-    if not _LINEAGE_CUT_ENABLED:
-        return df.persist()
     out = df.localCheckpoint(eager=eager)
     out._pps_ckpt_src = df
     try:
         out._pps_ckpt_rdd = out._jdf.queryExecution().analyzed().rdd()
-    except Exception:  # plan shape changed across Spark versions — GC frees
+    except (Py4JError, AttributeError) as e:
+        # Py4JError: the analyzed plan is not a LogicalRDD (its shape
+        # changed across Spark versions); AttributeError: no JVM handle
         out._pps_ckpt_rdd = None
+        warnings.warn(
+            f"lineage_cut could not reach the checkpointed RDD ({e!r}); "
+            "release_cached cannot free its blocks, which stay pinned "
+            "until the JVM garbage-collects the RDD",
+            RuntimeWarning, stacklevel=2)
     return out
 
 

@@ -21,10 +21,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import noop, time_query  # noqa: E402
 from pandas_plus_spark.session import get_spark  # noqa: E402
 
 HEAVY = [
@@ -57,22 +57,10 @@ def main() -> None:
 
 
 def run_dir(spark, sf_dir: str, names: list[str]) -> None:
-    import __spark_entry__ as entry_mod
-
-    registry = entry_mod.queries()
-    # folded compound gates (r10 consolidation): resolve the original
-    # query shapes via module-level callables for timing continuity
-    qs = {n: registry.get(n) or getattr(entry_mod, "_q_" + n)
-          for n in set(names) | {"segment_revenue_bucketed",
-                                 "incremental_dedup_indexed"}}
-
     from pandas_plus_spark.sources import load_tables
     for df in load_tables(spark, sf_dir).values():
         df.count()
-    spark.range(1000).selectExpr("sum(id) as s").write.format("noop").mode(
-        "overwrite").save()
-
-    from pandas_plus_spark.util import release_cached
+    noop(spark.range(1000).selectExpr("sum(id) as s"))
 
     # Layout-backed queries measure the STEADY-STATE plan over a standing
     # warehouse artifact (bucketed fact tables / stored dedup index); build
@@ -81,21 +69,13 @@ def run_dir(spark, sf_dir: str, names: list[str]) -> None:
     builds = {}
     for lq in ("segment_revenue_bucketed", "incremental_dedup_indexed"):
         if lq in names:
-            t0 = time.perf_counter()
-            qs[lq](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            builds[lq] = round(time.perf_counter() - t0, 4)
+            builds[lq] = time_query(spark, sf_dir, lq)
             print(f"# layout build+first run ({lq}): {builds[lq]:.2f}s",
                   file=sys.stderr)
 
     timings: dict[str, float] = {}
     for name in names:
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 4)
-        # release operator-persisted intermediates between queries (the
-        # documented caller contract; avoids cross-query storage pressure)
-        release_cached(df)
+        timings[name] = time_query(spark, sf_dir, name)
         print(f"# {name}: {timings[name]:.2f}s", file=sys.stderr)
     out = {
         "metric": "scaled_bench_wall",

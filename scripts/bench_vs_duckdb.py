@@ -36,8 +36,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 
+from bench import HEADLINE, time_query, warm_session  # noqa: E402
 from pandas_plus_spark.session import get_spark  # noqa: E402
-from pandas_plus_spark.util import release_cached  # noqa: E402
 
 # Oracle twins for query shapes whose registry entries were folded into
 # compound gates by the r10 consolidation (the compounds' oracles cover
@@ -60,19 +60,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as em
-    from bench import HEADLINE, warm_session
     from oracle_harness import duck_connection
 
-    registry, sqls = em.queries(), em.oracle_sql()
+    sqls = em.oracle_sql()
     # the stored-index form is pure precomputation — same twin as the fold
     FOLDED_SQL.setdefault("incremental_dedup_indexed",
                           em._sql_incremental_dedup())
-
-    # folded compound gates (r10 consolidation): price the original query
-    # shapes via module-level callables for BENCH name continuity; their
-    # oracle SQL twins live in FOLDED_SQL below.
-    def q(name):
-        return registry.get(name) or getattr(em, "_q_" + name)
 
     argv = sys.argv[2:]
     passes = 1
@@ -82,18 +75,14 @@ def main() -> None:
         argv = argv[:i] + argv[i + 2:]
     names = argv or [n for n in HEADLINE
                      if n in sqls or n in FOLDED_SQL]
-    qs = {n: q(n) for n in names}
-    for n in ("group_minmax", "shift"):
-        qs.setdefault(n, q(n))
     sqls = {**FOLDED_SQL, **sqls}
 
     # Warm the engine INFRASTRUCTURE only (JVM C2, Python worker pool,
     # committer) — never a priced plan; see bench.warm_session. The timed
     # pass below still pays every priced plan's own codegen compile + AQE.
-    warm_session(spark, sf_dir, qs)
+    warm_session(spark, sf_dir)
     if "incremental_dedup_indexed" in names:
-        q("incremental_dedup_indexed")(spark, sf_dir).write.format(
-            "noop").mode("overwrite").save()
+        time_query(spark, sf_dir, "incremental_dedup_indexed")
 
     con = duck_connection(sf_dir)
     # symmetric warm on the DuckDB side (negligible, kept for protocol
@@ -103,11 +92,7 @@ def main() -> None:
     for pass_no in range(1, passes + 1):
         results: dict[str, dict] = {}
         for name in names:
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            eng = round(time.perf_counter() - t0, 4)
-            release_cached(df)
+            eng = time_query(spark, sf_dir, name)
             t0 = time.perf_counter()
             con.sql(sqls[name]).arrow()
             duck = round(time.perf_counter() - t0, 4)

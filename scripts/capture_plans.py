@@ -13,6 +13,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE, resolve  # noqa: E402
+
 
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
@@ -26,18 +28,9 @@ def main() -> None:
     spark = get_spark(app_name="plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entry_mod
-    from bench import HEADLINE
-
-    registry = entry_mod.queries()
-
-    def q(name):
-        return registry.get(name) or getattr(entry_mod, "_q_" + name)
-
-    names = only or HEADLINE
-    for name in names:
+    for name in only or HEADLINE:
         try:
-            df = q(name)(spark, sf_dir)
+            df = resolve(name)(spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution
                 .ExplainMode.fromString("formatted"))

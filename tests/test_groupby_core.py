@@ -1172,6 +1172,41 @@ class TestEwmMean:
                         assert abs(x - y) <= 1e-9 * max(1.0, abs(y)), \
                             (alpha, key)
 
+    def test_scan_carry_shares_the_chunk_sort(self, spark):
+        """The lag-1 carry reads the LAST row of each previous chunk, which
+        holds that chunk's full cumsum only in the chunk window's row
+        order. Pin the plan that guarantees it: no Sort between the
+        chunk-cumsum Window and the carry Window, and two sorts in total
+        after the exchange (row numbering, then chunk + carry + fill)."""
+        import re
+
+        import numpy as np
+        import pandas as pd
+        n = 900  # 3 groups x 300 rows; alpha=0.5 -> L=57, ~6 chunks/group
+        pdf = pd.DataFrame({
+            "k": np.arange(n) % 3, "o": np.arange(n),
+            "v": np.random.default_rng(7).standard_normal(n)})
+        out = (GroupBy(spark.createDataFrame(pdf), "k", order_by="o")
+               .ewm_mean("v", alpha=0.5, method="scan"))
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        ops = []  # (operator, line) top-down along the single chain
+        for line in final.splitlines():
+            m = re.match(r"[\s:+|-]*(?:\*\(\d+\) )?([A-Za-z]+)", line)
+            if m:
+                ops.append((m.group(1), line))
+        names = [o for o, _ in ops]
+        carry = next(i for i, (o, ln) in enumerate(ops)
+                     if o == "Window" and " AS __pn#" in ln)
+        chunk = next(i for i, (o, ln) in enumerate(ops)
+                     if o == "Window" and "sum(__z_v" in ln)
+        assert carry < chunk, final
+        assert "Sort" not in names[carry:chunk], final
+        exchange = names.index("Exchange")
+        assert names[:exchange].count("Sort") == 2, final
+
+
 class TestRankMethods:
     def test_all_methods_match_pandas(self, spark):
         import pandas as pd

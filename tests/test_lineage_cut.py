@@ -1,12 +1,14 @@
 """util.lineage_cut (r16): plan truncation for reused intermediates.
 
-Pins the three contracts the optimization relies on:
+Pins the four contracts the optimization relies on:
 
 1. value identity — a cut frame returns exactly the source's rows;
 2. plan truncation + deterministic release — the cut frame's plan is a
    LogicalRDD leaf, and release_cached frees the checkpoint blocks;
 3. no lint blind spots — plans.lint walks the stashed pre-cut source, so
    anti-patterns BELOW a cut are still reported;
+4. no silent leak — when the checkpointed RDD cannot be reached (so
+   release_cached cannot free it), lineage_cut warns;
 
 plus the r15 ADVICE regression: _zip_array_key's positional reconstruction
 (spark_partition_id + monotonically_increasing_id) stays correct on a
@@ -18,7 +20,6 @@ made executable.
 import pyspark.sql.functions as F
 import pytest
 
-from pandas_plus_spark import util
 from pandas_plus_spark.util import attach_cached, lineage_cut, release_cached
 
 
@@ -52,19 +53,27 @@ class TestLineageCut:
         lvl = rdd.getStorageLevel()
         assert not lvl.useMemory() and not lvl.useDisk()
 
-    def test_persist_fallback_toggle(self, spark):
-        src = spark.range(10)
-        old = util._LINEAGE_CUT_ENABLED
-        util._LINEAGE_CUT_ENABLED = False
-        try:
+    def test_unreachable_checkpoint_rdd_warns(self):
+        """A plan walk that cannot reach the checkpointed RDD must not
+        leak its blocks silently: lineage_cut warns and the frame is
+        still returned (no Spark session — a stub stands in for it)."""
+        from py4j.protocol import Py4JError
+
+        class _Plan:
+            def queryExecution(self):
+                raise Py4JError("Method rdd([]) does not exist")
+
+        class _Frame:
+            _jdf = _Plan()
+
+            def localCheckpoint(self, eager):
+                return _Frame()
+
+        src = _Frame()
+        with pytest.warns(RuntimeWarning, match="release_cached cannot free"):
             out = lineage_cut(src)
-            # fallback is the r15 behavior: persist() returns the SAME
-            # frame (no plan truncation, no checkpoint handle)
-            assert out is src
-            assert getattr(out, "_pps_ckpt_rdd", None) is None
-        finally:
-            util._LINEAGE_CUT_ENABLED = old
-            src.unpersist()
+        assert out._pps_ckpt_rdd is None
+        assert out._pps_ckpt_src is src
 
     def test_lint_sees_below_the_cut(self, spark):
         from pandas_plus_spark.plans import lint
