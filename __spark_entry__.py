@@ -5142,81 +5142,75 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # CADENCE INVARIANT (r8 restatement — the registry outgrew the old
     # three-round union): with N entries and a 50-entry window, every
     # entry gets a driver-side CORRECTNESS row at least every
-    # ceil(N / 50) rounds (N = 181 -> 4 rounds), the window head is
+    # ceil(N / 50) rounds (N = 187: ceil(187/50) = 4), the window head is
     # always (new entries, then never-verified, then re-verifications of
     # code changed this round, then the least-recently-verified), and the
     # EVERY-round bridge is the full-registry local oracle gate
-    # (scripts/run_gate.py, 181/181 at sf0.01) + the pinned SUBSET in
+    # (scripts/run_gate.py, 187/187 at sf0.01) + the pinned SUBSET in
     # tests/test_oracle_gate.py. The invariant is MACHINE-CHECKED:
     # scripts/check_rotation.py reads CORRECTNESS_r*.json history plus
     # this dict's order and fails if any entry's staleness would exceed
     # the cadence or the window head is not least-recently-verified-
     # first; tests/test_oracle_gate.py runs it in pytest.
-    #
-    # r14 WINDOW (first 50): the 34 entries at the 4-round cadence
-    # bound (last driver-green r10) plus the 16 stalest r11 entries —
-    # pure rotation, no consolidations needed. New r14 entries are
-    # inserted at the head as they land, displacing the newest r11
-    # fills into the r15 window.
     return {
-        # --- r16 window head (driver samples the FIRST 50) ---
-        # r16 rotation: the 37 entries at the 4-round cadence bound
-        # (last driver-green r12) plus the 13 stalest r13 entries —
+        # --- r17 window head (driver samples the FIRST 50) ---
+        # r17 rotation: the 37 entries at the 4-round cadence bound
+        # (last driver-green r13) plus the 13 stalest r14 entries —
         # pure rotation; registry 187, zero rows-only, zero new
-        # entries (r16 is an optimization round). Greedy sim stays
-        # feasible: r13 leftovers are due r17, r14 entries r18.
-        # last driver-green r12 (due now):
-        "token_budget": _q_token_budget,
-        "quantile_calibration": _q_quantile_calibration,
-        "leakage_split": _q_leakage_split,
-        "leakage_split_lsh": _q_leakage_split_lsh,
-        "filter_groups": _q_filter_groups,
-        "group_idxminmax": _q_group_idxminmax,
-        "pct_change": _q_pct_change,
-        "cumprod": _q_cumprod,
-        "group_prod_any_all": _q_group_prod_any_all,
-        "group_sem": _q_group_sem,
-        "group_skew_kurt": _q_group_skew_kurt,
-        "ngroup": _q_ngroup,
-        "group_fill": _q_group_fill,
-        "resample_agg": _q_resample_agg,
-        "qcut_deciles": _q_qcut_deciles,
-        "pivot_table_mean": _q_pivot_table_mean,
-        "group_rank_methods": _q_group_rank_methods,
-        "group_take": _q_group_take,
-        "corrwith": _q_corrwith,
-        "duplicated_flags": _q_duplicated_flags,
-        "ewm_mean": _q_ewm_mean,
-        "group_ohlc": _q_group_ohlc,
-        "group_describe": _q_group_describe,
-        "group_nlargest": _q_group_nlargest,
-        "group_ffill_scale": _q_group_ffill_scale,
-        "group_take_scale": _q_group_take_scale,
-        "ewm_var_std": _q_ewm_var_std,
-        "group_bfill_scale": _q_group_bfill_scale,
-        "streaming_ewm": _q_streaming_ewm,
-        "group_shift_scale": _q_group_shift_scale,
-        "group_cumminmax_scale": _q_group_cumminmax_scale,
-        "cosine_neardup": _q_cosine_neardup,
-        "dup_clusters": _q_dup_clusters,
-        "dedup_keep_list": _q_dedup_keep_list,
-        "streaming_neardup": _q_streaming_neardup,
-        "pca_gate": _q_pca_gate,
-        "pack_gate": _q_pack_gate,
-        "ess_excision": _q_ess_excision,
-        "fuzzy_dedup": _q_fuzzy_dedup,
-        "weighted_pagerank": _q_weighted_pagerank,
-        "personalized_pagerank": _q_personalized_pagerank,
-        "fuzzy_join": _q_fuzzy_join,
-        "rolling_quantile": _q_rolling_quantile,
-        "expanding_stats": _q_expanding_stats,
-        "group_expanding_scale": _q_group_expanding_scale,
-        "asof_nearest": _q_asof_nearest,
-        "semantic_contamination": _q_semantic_contamination,
-        "containment_pairs": _q_containment_pairs,
-        "ivf_index_gate": _q_ivf_index_gate,
-        "quality_classifier": _q_quality_classifier,
-        # --- rotation tail (relative order preserved) ---
+        # entries. Greedy sim stays feasible: r14 leftovers are due
+        # r18, r15 entries r19.
+        # last driver-green r13 (due now):
+        "source_cap": _q_source_cap,
+        "global_sample": _q_global_sample,
+        "segment_revenue_bucketed": _q_segment_revenue_bucketed,
+        "q6_forecast": _q_q6_forecast,
+        "q3_shipping": _q_q3_shipping,
+        "temperature_mixture": _q_temperature_mixture,
+        "duplicated_spans": _q_duplicated_spans,
+        "span_excision": _q_span_excision,
+        "segment_revenue": _q_segment_revenue,
+        "skew_topn_salted": _q_skew_topn_salted,
+        "skew_topn_uniform": _q_skew_topn_uniform,
+        "ann_recall": _q_ann_recall,
+        "stratified_sample": _q_stratified_sample,
+        "split_assign": _q_split_assign,
+        "sample_per_group": _q_sample_per_group,
+        "pack_chunks": _q_pack_chunks,
+        "repetition_signals": _q_repetition_signals,
+        "repetition_filter": _q_repetition_filter,
+        "pii_scan": _q_pii_scan,
+        "c4_filter": _q_c4_filter,
+        "contamination": _q_contamination,
+        "tfidf_top_terms": _q_tfidf_top_terms,
+        "bm25_rank": _q_bm25_rank,
+        "vocab_top": _q_vocab_top,
+        "image_header_meta": _q_image_header_meta,
+        "boilerplate_removal": _q_boilerplate_removal,
+        "snapshot_diff": _q_snapshot_diff,
+        "audio_pcm_features": _q_audio_pcm_features,
+        "scatter_fit": _q_scatter_fit,
+        "rolling_gate": _q_rolling_gate,
+        "cumulative_gate": _q_cumulative_gate,
+        "incremental_dedup": _q_incremental_dedup,
+        "url_normalize": _q_url_normalize,
+        "crawl_domain_stats": _q_crawl_domain_stats,
+        "crawl_curation_pipeline": _q_crawl_curation_pipeline,
+        "oov_rate": _q_oov_rate,
+        "label_cohesion": _q_label_cohesion,
+        # stalest r14 fills (due r18; the first 13 complete the window):
+        "bpe_train_distributed": _q_bpe_train_distributed,
+        "fuzzy_join_k2": _q_fuzzy_join_k2,
+        "dedup_keep_best": _q_dedup_keep_best,
+        "rolling_corr_cov": _q_rolling_corr_cov,
+        "decontaminate": _q_decontaminate,
+        "group_rolling_corr_scale": _q_group_rolling_corr_scale,
+        "streaming_decontaminate": _q_streaming_decontaminate,
+        "nanops_rowwise": _q_nanops_rowwise,
+        "streaming_sessions": _q_streaming_sessions,
+        "q1_pricing_summary": _q_q1_pricing_summary,
+        "masked_sum": _q_masked_sum,
+        "group_size": _q_size,
+        "group_minmax": _q_minmax,
         "decontaminate_drop": _q_decontaminate_drop,
         "epoch_mixture": _q_epoch_mixture,
         "epoch_plan": _q_epoch_plan,
@@ -5267,56 +5261,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "robots_filter": _q_robots_filter,
         "outlink_graph": _q_outlink_graph,
         "warc_ingest": _q_warc_ingest,
-        "source_cap": _q_source_cap,
-        "global_sample": _q_global_sample,
-        "segment_revenue_bucketed": _q_segment_revenue_bucketed,
-        "q6_forecast": _q_q6_forecast,
-        "q3_shipping": _q_q3_shipping,
-        "temperature_mixture": _q_temperature_mixture,
-        "duplicated_spans": _q_duplicated_spans,
-        "span_excision": _q_span_excision,
-        "segment_revenue": _q_segment_revenue,
-        "skew_topn_salted": _q_skew_topn_salted,
-        "skew_topn_uniform": _q_skew_topn_uniform,
-        "ann_recall": _q_ann_recall,
-        "stratified_sample": _q_stratified_sample,
-        "split_assign": _q_split_assign,
-        "sample_per_group": _q_sample_per_group,
-        "pack_chunks": _q_pack_chunks,
-        "repetition_signals": _q_repetition_signals,
-        "repetition_filter": _q_repetition_filter,
-        "pii_scan": _q_pii_scan,
-        "c4_filter": _q_c4_filter,
-        "contamination": _q_contamination,
-        "tfidf_top_terms": _q_tfidf_top_terms,
-        "bm25_rank": _q_bm25_rank,
-        "vocab_top": _q_vocab_top,
-        "image_header_meta": _q_image_header_meta,
-        "boilerplate_removal": _q_boilerplate_removal,
-        "snapshot_diff": _q_snapshot_diff,
-        "audio_pcm_features": _q_audio_pcm_features,
-        "scatter_fit": _q_scatter_fit,
-        "rolling_gate": _q_rolling_gate,
-        "cumulative_gate": _q_cumulative_gate,
-        "incremental_dedup": _q_incremental_dedup,
-        "url_normalize": _q_url_normalize,
-        "crawl_domain_stats": _q_crawl_domain_stats,
-        "crawl_curation_pipeline": _q_crawl_curation_pipeline,
-        "oov_rate": _q_oov_rate,
-        "label_cohesion": _q_label_cohesion,
-        "bpe_train_distributed": _q_bpe_train_distributed,
-        "fuzzy_join_k2": _q_fuzzy_join_k2,
-        "dedup_keep_best": _q_dedup_keep_best,
-        "rolling_corr_cov": _q_rolling_corr_cov,
-        "decontaminate": _q_decontaminate,
-        "group_rolling_corr_scale": _q_group_rolling_corr_scale,
-        "streaming_decontaminate": _q_streaming_decontaminate,
-        "nanops_rowwise": _q_nanops_rowwise,
-        "streaming_sessions": _q_streaming_sessions,
-        "q1_pricing_summary": _q_q1_pricing_summary,
-        "masked_sum": _q_masked_sum,
-        "group_size": _q_size,
-        "group_minmax": _q_minmax,
         "group_var_std": _q_var_std,
         "agg_callable": _q_agg_callable,
         "group_median": _q_median,
@@ -5354,6 +5298,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sitemap_urls": _q_sitemap_urls,
         "unicode_nfc": _q_unicode_nfc,
         "mojibake_repair": _q_mojibake_repair,
+        # --- rotation tail (relative order preserved) ---
+        "token_budget": _q_token_budget,
+        "quantile_calibration": _q_quantile_calibration,
+        "leakage_split": _q_leakage_split,
+        "leakage_split_lsh": _q_leakage_split_lsh,
+        "filter_groups": _q_filter_groups,
+        "group_idxminmax": _q_group_idxminmax,
+        "pct_change": _q_pct_change,
+        "cumprod": _q_cumprod,
+        "group_prod_any_all": _q_group_prod_any_all,
+        "group_sem": _q_group_sem,
+        "group_skew_kurt": _q_group_skew_kurt,
+        "ngroup": _q_ngroup,
+        "group_fill": _q_group_fill,
+        "resample_agg": _q_resample_agg,
+        "qcut_deciles": _q_qcut_deciles,
+        "pivot_table_mean": _q_pivot_table_mean,
+        "group_rank_methods": _q_group_rank_methods,
+        "group_take": _q_group_take,
+        "corrwith": _q_corrwith,
+        "duplicated_flags": _q_duplicated_flags,
+        "ewm_mean": _q_ewm_mean,
+        "group_ohlc": _q_group_ohlc,
+        "group_describe": _q_group_describe,
+        "group_nlargest": _q_group_nlargest,
+        "group_ffill_scale": _q_group_ffill_scale,
+        "group_take_scale": _q_group_take_scale,
+        "ewm_var_std": _q_ewm_var_std,
+        "group_bfill_scale": _q_group_bfill_scale,
+        "streaming_ewm": _q_streaming_ewm,
+        "group_shift_scale": _q_group_shift_scale,
+        "group_cumminmax_scale": _q_group_cumminmax_scale,
+        "cosine_neardup": _q_cosine_neardup,
+        "dup_clusters": _q_dup_clusters,
+        "dedup_keep_list": _q_dedup_keep_list,
+        "streaming_neardup": _q_streaming_neardup,
+        "pca_gate": _q_pca_gate,
+        "pack_gate": _q_pack_gate,
+        "ess_excision": _q_ess_excision,
+        "fuzzy_dedup": _q_fuzzy_dedup,
+        "weighted_pagerank": _q_weighted_pagerank,
+        "personalized_pagerank": _q_personalized_pagerank,
+        "fuzzy_join": _q_fuzzy_join,
+        "rolling_quantile": _q_rolling_quantile,
+        "expanding_stats": _q_expanding_stats,
+        "group_expanding_scale": _q_group_expanding_scale,
+        "asof_nearest": _q_asof_nearest,
+        "semantic_contamination": _q_semantic_contamination,
+        "containment_pairs": _q_containment_pairs,
+        "ivf_index_gate": _q_ivf_index_gate,
+        "quality_classifier": _q_quality_classifier,
     }
 
 
