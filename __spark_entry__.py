@@ -4134,10 +4134,11 @@ def _q_qcut_deciles(spark, sf):
 
 
 def _q_pivot_table_mean(spark, sf):
-    """pandas pivot_table over the crosstab cube engine: mean doc length
-    per source x lang with full margins — one cube pass, then the tiny
-    aggregated frame pivots. column_values passed explicitly (skips the
-    distinct-discovery job — the 100 TB contract)."""
+    """pandas pivot_table over the crosstab engine: mean doc length per
+    source x lang with full margins — one aggregation of masked cells
+    (avg(when(lang == v, n_chars)) per value, the unmasked avg as "All"),
+    its "All" row the empty grouping set. column_values passed explicitly
+    (skips the distinct-discovery job — the 100 TB contract)."""
     docs = load_table(spark, sf, "documents")
     from pandas_plus_spark import pivot_table
     out = pivot_table(docs, values="n_chars", index="source",

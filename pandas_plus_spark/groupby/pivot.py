@@ -1,19 +1,15 @@
-"""crosstab — pivot table with optional margins.
+"""crosstab — pivot table with optional margins, in ONE conditional aggregation.
 
-Reference: core.py:1913-1991 (crosstab) + add_row_margin core.py:1994-2051.
-The reference groups by index+column keys, aggregates, then unstacks and
-recursively re-aggregates for margins. Spark-first shape:
-
-- no margins: one ``groupBy(index).pivot(col).agg`` — a single shuffle.
-- with margins: one ``cube(index..., col)`` pass — Catalyst evaluates every
-  grouping set in a single scan+shuffle — then the tiny aggregated frame is
-  labeled ("All") and pivoted. ONE pass over the data regardless of which
-  margins are requested (the old formulation re-scanned the fact table per
-  margin axis).
+Reference: core.py:1913-1991 (crosstab) + add_row_margin core.py:1994-2051,
+which aggregates by index+column keys, unstacks, then re-aggregates for
+margins. Spark-first shape: the paper's inline mask once per column value —
+cell ``v`` = ``aggfunc(when(column == v, values))`` — in one ``groupBy(index)``.
+The "All" column is the unmasked aggregate; the "All" row, the empty set of
+``groupingSets([index, ()])``, collapses every index level at once. Plan: one
+partial/final aggregate and the ``orderBy(index)`` sort — 2 exchanges.
 
 Always pass ``column_values`` when known: it saves the distinct-scan job
-Spark otherwise runs to discover pivot values — at 100 TB that discovery is
-a full extra pass.
+that discovers them — at 100 TB that discovery is a full extra pass.
 """
 
 from __future__ import annotations
@@ -23,16 +19,47 @@ from pyspark.sql import functions as F
 
 from .core import GroupBy, _ALL_LABEL, _as_list
 
+_AGG = {"sum": F.sum, "mean": F.avg, "count": F.count, "min": F.min, "max": F.max,
+        "median": F.median, "var": F.var_samp, "std": F.stddev_samp}
 
-def _agg_expr(func: str, values: str | None):
-    if func == "size" or values is None:
-        return F.count(F.lit(1))
-    fn = {
-        "sum": F.sum, "mean": F.avg, "count": F.count, "min": F.min,
-        "max": F.max, "median": F.median,
-        "var": F.var_samp, "std": F.stddev_samp,
-    }[func]
-    return fn(F.col(values))
+
+def _cell(func: str, values: str | None, hit):
+    """``func`` over the rows where ``hit`` holds, NULL on no rows: only count
+    needs a guard for that, kept off the rest (it costs ~10 %)."""
+    fn, x = ((F.count, F.lit(1)) if func == "size" or values is None
+             else (_AGG[func], F.col(values)))
+    out = fn(F.when(hit, x))
+    return F.when(F.count(F.when(hit, F.lit(1))) > 0, out) if fn is F.count else out
+
+
+def _names(spark, values: list) -> list:
+    """Output column names of given pivot values, spelled as Spark's pivot
+    spells them: their string cast ("null", "true", "1.0E-5"). Python agrees
+    for None, str, int and bool; other types cast in a one-row frame (a job)."""
+    if all(v is None or type(v) in (str, int, bool) for v in values):
+        return ["null" if v is None else str(v).lower() if type(v) is bool else str(v)
+                for v in values]
+    row = spark.createDataFrame([(0,)], "i int").select(
+        *[F.lit(v).cast("string") for v in values]).first()
+    return ["null" if n is None else n for n in row]
+
+
+def _discover(base: DataFrame, columns: str, key, want_col: bool) -> list:
+    """Spark's ``pivot(col)`` discovery — its distinct query, sorted nulls
+    first, the same ``spark.sql.pivotMaxValues`` error — as (value, name)
+    pairs, with "All" sorted in among the string labels."""
+    max_values = int(base.sparkSession.conf.get("spark.sql.pivotMaxValues"))
+    found = [(v, "null" if n is None else n) for v, n in base.select(
+        key.alias(columns), key.cast("string")).distinct()
+        .limit(max_values + 1).sort(columns).collect()]
+    if want_col and found and (_ALL_LABEL, _ALL_LABEL) not in found:
+        found = sorted(found + [(_ALL_LABEL,) * 2], key=lambda p: (p[0] is not None, p[0]))
+    if len(found) > max_values:
+        from pyspark.errors.exceptions.captured import convert_exception
+        errors = base.sparkSession._jvm.org.apache.spark.sql.errors.QueryCompilationErrors
+        raise convert_exception(
+            errors.aggregationFunctionAppliedOnNonNumericColumnError(columns, max_values))
+    return found
 
 
 def crosstab(
@@ -50,63 +77,35 @@ def crosstab(
     value of ``columns``, cells = aggfunc(values).
 
     margins: True = row and column totals, 'row' / 'column' for one axis
-    (reference core.py:1955-1962).
+    (reference core.py:1955-1962). With margins the index keys and column
+    labels are strings (they share their columns with "All"), and the "All"
+    column also counts rows whose value is not in ``column_values``.
     """
     index = _as_list(index)
     base = GroupBy(df, index + [columns], dropna=dropna)._base()
     if mask is not None:
         base = base.filter(mask if not isinstance(mask, str) else F.col(mask))
-    expr = _agg_expr(aggfunc, values)
-
-    if not margins:
-        grouped = base.groupBy(*index)
-        pivoted = (grouped.pivot(columns, column_values) if column_values is not None
-                   else grouped.pivot(columns)).agg(expr)
-        return pivoted.orderBy(*index)
-
     want_row = margins in (True, "row")      # an "All" index row
     want_col = margins in (True, "column")   # an "All" total column
-
-    # One cube pass computes every grouping set; filter to the requested
-    # margin combinations, label collapsed keys "All", then pivot the tiny
-    # aggregated frame.
-    # -1 marks partially-collapsed multi-index combos (cube emits them; the
-    # reference's margins are all-or-nothing per row) — filtered out below.
-    g_sum = sum([F.grouping(k) for k in index[1:]], F.grouping(index[0]))
-    g_index = (F.when(g_sum == 0, F.lit(0))
-               .when(g_sum == len(index), F.lit(1))
-               .otherwise(F.lit(-1)))
-    cubed = base.cube(*index, columns).agg(
-        expr.alias("__cell"),
-        g_index.alias("__g_idx"),
-        F.grouping(columns).alias("__g_col"),
-    )
-    keep = (F.col("__g_idx") == 0) & (F.col("__g_col") == 0)
-    if want_col:
-        keep = keep | ((F.col("__g_idx") == 0) & (F.col("__g_col") == 1))
-    if want_row:
-        keep = keep | ((F.col("__g_idx") == 1) & (F.col("__g_col") == 0))
-    if want_row and want_col:
-        keep = keep | ((F.col("__g_idx") == 1) & (F.col("__g_col") == 1))
-    cubed = cubed.filter(keep)
-
-    labeled = cubed.select(
-        *[
-            F.when(F.col("__g_idx") == 1, F.lit(_ALL_LABEL))
-            .otherwise(F.col(k).cast("string")).alias(k)
-            for k in index
-        ],
-        F.when(F.col("__g_col") == 1, F.lit(_ALL_LABEL))
-        .otherwise(F.col(columns).cast("string")).alias(columns),
-        F.col("__cell"),
-    )
-    pivot_vals = None
-    if column_values is not None:
-        pivot_vals = [str(v) for v in column_values] + ([_ALL_LABEL] if want_col else [])
-    grouped = labeled.groupBy(*index)
-    pivoted = (grouped.pivot(columns, pivot_vals) if pivot_vals is not None
-               else grouped.pivot(columns)).agg(F.first("__cell"))
-    return pivoted.orderBy(*index)
+    key = F.col(columns).cast("string") if margins else F.col(columns)
+    if column_values is None:
+        pivots = _discover(base, columns, key, want_col)
+    else:
+        vals = [str(v) if margins else v for v in column_values] + [_ALL_LABEL] * want_col
+        pivots = list(zip(vals, _names(base.sparkSession, vals)))
+    # cells mask rows null-safely, by value cast to the column's type as in
+    # Spark's pivot; the "All" column's mask is true
+    cast = "string" if margins else base.schema[columns].dataType
+    aggs = [_cell(aggfunc, values, F.lit(True) if want_col and v == _ALL_LABEL
+                  else key.eqNullSafe(F.lit(v).cast(cast))).alias(f"__c{i}")
+            for i, (v, _) in enumerate(pivots)]
+    grouped = base.groupingSets([index, []], *index) if want_row else base.groupBy(*index)
+    rolled = F.grouping(index[0]) == 1 if want_row else F.lit(False)  # the "All" row
+    agged = grouped.agg(*aggs, rolled.alias("__all"))
+    keys = [F.when(F.col("__all"), F.lit(_ALL_LABEL)).otherwise(F.col(k).cast("string"))
+            .alias(k) if margins else F.col(k) for k in index]
+    return agged.select(
+        *keys, *[F.col(f"__c{i}").alias(n) for i, (_, n) in enumerate(pivots)]).orderBy(*index)
 
 
 def pivot_table(
@@ -120,8 +119,8 @@ def pivot_table(
     dropna: bool = True,
     mask=None,
 ) -> DataFrame:
-    """pandas ``pivot_table`` argument order over the crosstab engine
-    (one cube/pivot pass — see :func:`crosstab`). pandas defaults apply:
+    """pandas ``pivot_table`` argument order over :func:`crosstab`'s one
+    masked-cell aggregation, margins included. pandas defaults apply:
     ``aggfunc='mean'`` (crosstab defaults to counts)."""
     if index is None or columns is None:
         raise ValueError("pivot_table requires index= and columns=")

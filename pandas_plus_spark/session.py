@@ -73,6 +73,18 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "1m")
         # Deterministic timestamp behavior regardless of host timezone.
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark's DataFrame debugging wrapper records the Python call site
+        # of every functions/Column call, at extra py4j round trips each.
+        # Off, building perfbench's three fresh groupby queries (masked_sum,
+        # crosstab_pivot, apply_zscore at sf0.1) took 304-364 py4j calls per
+        # warm pass instead of 764-1089. Trade-off: errors lose the Python
+        # call site from their DataFrame query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache (static conf, default 100): running the nine
+        # registry queries of both perfbench workloads in one session, every
+        # warm pass recompiled 67-96 evicted classes at 100 and none at
+        # 1000. Trade-off: up to 1000 compiled classes stay on the heap.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

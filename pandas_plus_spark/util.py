@@ -130,6 +130,8 @@ def release_cached(df: DataFrame) -> None:
                 rdd.unpersist(False)
             else:
                 f.unpersist()
-        except Exception:  # session already stopped — nothing to free
+        except Py4JError:
+            # a stopped session's BlockManagerMaster answers unpersist with
+            # a JVM NullPointerException (Py4JJavaError) — nothing to free
             pass
     df._pps_cached = []

@@ -152,7 +152,8 @@ class TestPivotTable:
         want = pdf.pivot_table(values="v", index="r", columns="c")
         assert got["x"] == (1.0, 2.0)
         assert got["y"] == (want.loc["y", "a"], 7.0)
-        # margins reuse the crosstab cube path
+        # margins ride the same masked-cell aggregation ("All" = unmasked
+        # aggregate, "All" row = the empty grouping set)
         m = pivot_table(sdf, values="v", index="r", columns="c",
                         aggfunc="sum", margins=True)
         rows = {r.r: r for r in m.collect()}

@@ -236,8 +236,16 @@ class TestPlanShape:
         g = GroupBy(tables["lineitem"], "l_returnflag").persist()
         try:
             g.sum("l_quantity").collect()  # materialize cache
-            plan = g.mean("l_quantity")._jdf.queryExecution().executedPlan().toString()
+            read = g.mean("l_quantity")
+            read.collect()
+            plan = read._jdf.queryExecution().executedPlan().toString()
             assert "InMemoryTableScan" in plan
+            # the aggregation reuses the cache's key partitioning: the only
+            # Exchange above the cache scan is the output sort's range
+            # partitioning, never a second hash shuffle on the keys
+            above = plan.split("InMemoryTableScan")[0]
+            exchanges = [ln for ln in above.splitlines() if "Exchange " in ln]
+            assert exchanges and all("rangepartitioning" in ln for ln in exchanges), above
         finally:
             g.unpersist()
 

@@ -75,6 +75,29 @@ class TestLineageCut:
         assert out._pps_ckpt_rdd is None
         assert out._pps_ckpt_src is src
 
+    def test_release_cached_propagates_non_py4j_errors(self):
+        """release_cached swallows only the Py4JError a stopped session
+        raises; any other unpersist failure propagates (no Spark session —
+        stubs stand in for the cached frames)."""
+        from py4j.protocol import Py4JError
+
+        class _Cached:
+            def __init__(self, exc):
+                self.exc = exc
+
+            def unpersist(self):
+                raise self.exc
+
+        class _Out:
+            pass
+
+        stopped = attach_cached(_Out(), _Cached(Py4JError("stopped")))
+        release_cached(stopped)
+        assert stopped._pps_cached == []
+        broken = attach_cached(_Out(), _Cached(ValueError("bug")))
+        with pytest.raises(ValueError, match="bug"):
+            release_cached(broken)
+
     def test_lint_sees_below_the_cut(self, spark):
         from pandas_plus_spark.plans import lint
         slow = F.udf(lambda x: x + 1, "long", useArrow=False)
