@@ -28,32 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..util import attach_cached
-
-
-# persist placement for _grouped_multi_cumsum (r10 A/B knob): True pins
-# the pre-window exchanged frame (halves the persist write volume — the
-# window's wide cumulative columns stream instead of hitting disk),
-# False pins the post-window frame. MEASURED (BASELINE.md r10): the
-# halved-write hypothesis did NOT cash out as wall-clock — sf1 same-boot
-# steady is equal (1.44 vs 1.61 s medians, identical once warm) and
-# sf100 reads post 186.7/179.4 s vs pre 195.3/185.1 s (post ~4% better,
-# inside noise): the cost lives in the 8-partition window funnel and the
-# exchange, not the persist IO the OS page cache absorbs. Default False
-# (the measured-marginally-better pre-r10 shape); the knob stays for
-# reproducing the A/B.
-_MC_PERSIST_PREWINDOW = False
-
-# r10 measured decision (same-boot 4-round A/B at sf1, BASELINE.md): the
-# deterministic-literal-bounds pipeline (no persist, totals from the
-# source) HALVES true first-run latency (4.1 s vs 8.0 s — fewer stages,
-# no RangePartitioner sampling, no persist write) but is ~1 s SLOWER at
-# steady state (2.6 vs 1.4 s median: its bounds job + independent totals
-# aggregation re-run every invocation while the pinned path's DISK_ONLY
-# round-trip rides the page cache), and the graded x3-median favors the
-# pinned path. Default False = pinned; flip for single-shot workloads
-# where every query is a first run.
-_MC_USE_DETBOUNDS = False
+from ..util import analyzed_size_bytes, attach_cached
 
 
 def _order_cols(order_by) -> list[Column]:
@@ -78,30 +53,20 @@ def _resolve_partitions(df: DataFrame, num_partitions: int | None) -> int:
     paid ~24 near-empty task dispatches per range stage at driver grain,
     and on a real cluster it would under-partition a 100 TB frame).
 
-    ``ceil(size / 256 KiB)`` from Catalyst's optimized-plan size estimate,
+    ``ceil(size / 256 KiB)`` from Catalyst's analyzed-plan size estimate,
     clamped below by 2 (cross-partition carry paths stay exercised even on
     tiny inputs) and above by ``max(defaultParallelism,
     ceil(size / 512 MiB))`` — i.e. the cap is core count until partitions
     would exceed ~512 MiB, after which partition count grows with the data.
     Catalyst OVER-estimates (join products, unknown selectivities) degrade
-    gracefully to the old ``defaultParallelism`` behavior; any stats
-    failure falls back likewise."""
+    gracefully to the old ``defaultParallelism`` behavior; an unknown size
+    (``util.analyzed_size_bytes`` returns ``None``) falls back
+    likewise."""
     if num_partitions:
         return num_partitions
     par = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        # analyzed (NOT optimized) plan stats: the basic size-only visitor
-        # gives the same estimate through Project/Filter nodes, and skips
-        # re-running the optimizer driver-side per operator call
-        # (measured 1–2 ms vs 10–270 ms per call at sf0.1)
-        size = int(df._jdf.queryExecution().analyzed()
-                   .stats().sizeInBytes())
-    except Exception:
-        return par
-    if size <= 0 or size >= (1 << 50):
-        # no estimate (empty local relation) or the "unknown" sentinel
-        # (spark.sql.defaultSizeInBytes = Long.MAX propagates through
-        # plans Catalyst can't size) — old behavior
+    size = analyzed_size_bytes(df)
+    if size is None:
         return par
     want = max(2, -(-size // _RANGE_TARGET_BYTES))
     cap = max(par, -(-size // _RANGE_MAX_PARTITION_BYTES))
@@ -638,152 +603,6 @@ def grouped_rolling_stats(
                          *getattr(run, "_pps_cached", ()))
 
 
-def _literal_bucket_plan(df, gnames, key: str, m: int):
-    """ONE cheap aggregation job → per-group literal cutpoints for a
-    DETERMINISTIC bucket assignment over (group..., key) order: group
-    row counts + approx_percentile cuts of ``key`` (accuracy 200 — the
-    cuts only steer partition BALANCE, never correctness: the
-    within-bucket sort owns the order; measured 0.4 s vs 1.4 s at
-    accuracy 2000 over 10M rows, and this job runs per invocation),
-    collected once and embedded as plan LITERALS.
-
-    This is the r9-parked deterministic-range-bounds rewrite, safe now
-    that the ordered gates ship decimal-exact sums (bit-equality no
-    longer depends on partition boundaries): because the bucket id is a
-    pure literal function of the row, every consumer recomputes the SAME
-    assignment — the repartitionByRange two-branch boundary hazard (and
-    its corpus-sized DISK_ONLY persist pin) disappears, and the
-    per-bucket prefix totals can be aggregated straight from the SOURCE
-    instead of from the pinned window output.
-
-    Returns ``[(group_values, base, cuts)]`` rows for
-    :func:`_bucket_expr_from_plan`, or None when the shape doesn't fit
-    (too many groups for a literal when-chain, NULL group values/cuts)
-    — callers fall back to the pinned range partition. Callers must
-    guarantee ``key`` is non-null (NULL keys would sort first but bucket
-    last)."""
-    probs = [j / 32 for j in range(1, 32)]
-    try:
-        rows = (df.groupBy(*gnames)
-                .agg(F.count(key).alias("__c"),
-                     F.percentile_approx(key, probs, 200).alias("__q"))
-                .collect())
-    except Exception:
-        return None
-    if not rows or len(rows) > 64:
-        return None
-    if any(any(r[g] is None for g in gnames) or r["__q"] is None
-           for r in rows):
-        return None
-    total = sum(r["__c"] for r in rows) or 1
-    plan = []
-    base = 0
-    for r in rows:
-        n_b = max(1, round(m * r["__c"] / total))
-        qs = [q for q in r["__q"] if q is not None]
-        cuts = []
-        for j in range(1, n_b):
-            idx = min(len(qs) - 1, max(0, round(j * len(qs) / n_b) - 1))
-            if qs:
-                cuts.append(qs[idx])
-        cuts = sorted(set(cuts))
-        plan.append((tuple(r[g] for g in gnames), base, cuts))
-        base += len(cuts) + 1
-    return plan
-
-
-def _bucket_expr_from_plan(plan, gnames, key: str):
-    """The literal bucket-id Column for a collected
-    :func:`_literal_bucket_plan` — reusable against ANY frame that
-    carries the group columns and a ``key`` column with the planned
-    distribution (rolling_time builds it twice: once for the exploded
-    union on __key, once for the totals source on the raw ``on``)."""
-    kcol = F.col(key)
-    expr = None
-    last_base = 0
-    for gvals, base, cuts in plan:
-        bucket = F.lit(base)
-        for c in cuts:
-            bucket = bucket + (kcol > F.lit(c)).cast("int")
-        cond = None
-        for g, v in zip(gnames, gvals):
-            eq = F.col(g) == F.lit(v)
-            cond = eq if cond is None else (cond & eq)
-        expr = F.when(cond, bucket) if expr is None else expr.when(
-            cond, bucket)
-        last_base = base + len(cuts) + 1
-    # rows whose group never appeared in the bounds job (cannot happen
-    # for a deterministic source, but cheap to make total) get a bucket
-    # of their own at the end
-    return F.coalesce(expr, F.lit(last_base))
-
-
-def _grouped_multi_cumsum_detbounds(df, gnames, order_by, pairs,
-                                    num_partitions, key: str,
-                                    plan_df=None, plan_key=None,
-                                    totals_df=None, totals_key=None):
-    """:func:`_grouped_multi_cumsum` on DETERMINISTIC literal bucket
-    bounds (see :func:`_literal_bucket_plan`): source → bucket id →
-    ONE hash exchange on the bucket id → per-bucket running window →
-    broadcast prefix-offset join, with the per-(bucket, group) totals
-    aggregated INDEPENDENTLY from the source (map-side combine, tiny
-    shuffle) — no persist, no second consumption of the exchanged frame,
-    one linear corpus pipeline. Returns None when the bounds plan
-    doesn't fit; callers fall back to the pinned form. 4× more buckets
-    than partitions so the hash repartition keeps every core busy
-    despite bucket→partition collisions.
-
-    ``plan_df``/``plan_key``: a cheaper frame sharing the key
-    distribution for the bounds job (rolling_time passes the pre-explode
-    per-key aggregate). ``totals_df``/``totals_key``: a cheaper frame
-    whose sums equal df's per-bucket sums (rolling_time's anchor rows
-    are all-zero, so the pre-explode frame aggregates the same totals
-    from half the rows with no explode)."""
-    n = _resolve_partitions(df, num_partitions)
-    plan = _literal_bucket_plan(plan_df if plan_df is not None else df,
-                                gnames,
-                                plan_key if plan_key is not None else key,
-                                4 * n)
-    if plan is None:
-        return None
-    gcols = [F.col(c) for c in gnames]
-    ocols = _order_cols(order_by)
-    src = df.withColumn("__pidb", _bucket_expr_from_plan(plan, gnames, key))
-    if totals_df is not None:
-        tsrc = totals_df.withColumn(
-            "__pidb", _bucket_expr_from_plan(plan, gnames, totals_key))
-    else:
-        tsrc = src
-    totals = tsrc.groupBy("__pidb", *gcols).agg(
-        *[F.sum(vc).alias(f"__mt_{i}") for i, (vc, _) in enumerate(pairs)])
-    w_off = (Window.partitionBy(*gcols).orderBy("__pidb")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = totals.select(
-        F.col("__pidb").alias("__opid"),
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(gnames)],
-        *[F.sum(f"__mt_{i}").over(w_off).alias(f"__mo_{i}")
-          for i in range(len(pairs))])
-    w_local = (Window.partitionBy("__pidb", *gcols).orderBy(*ocols)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    local = src.repartition(n, F.col("__pidb"))
-    for i, (vc, _) in enumerate(pairs):
-        local = local.withColumn(f"__mlc_{i}", F.sum(vc).over(w_local))
-    cond = F.col("__pidb") == F.col("__opid")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__og_{i}"))
-    out = local.join(F.broadcast(offs), cond, "left")
-    for i, (vc, oc) in enumerate(pairs):
-        zero = _sum_zero(df, vc)
-        lc, off = F.col(f"__mlc_{i}"), F.col(f"__mo_{i}")
-        out = out.withColumn(oc, F.when(
-            lc.isNull() & off.isNull(), F.lit(None)
-        ).otherwise(F.coalesce(lc, zero) + F.coalesce(off, zero)))
-    return out.drop("__pidb", "__opid",
-                    *[f"__og_{i}" for i in range(len(gnames))],
-                    *[f"__mlc_{i}" for i in range(len(pairs))],
-                    *[f"__mo_{i}" for i in range(len(pairs))])
-
-
 def _grouped_multi_cumsum(df, gnames, order_by, pairs, num_partitions):
     """:func:`grouped_cumsum` over SEVERAL value columns in one fused
     range-partition pass (one exchange, one persist, one boundary frame
@@ -794,33 +613,22 @@ def _grouped_multi_cumsum(df, gnames, order_by, pairs, num_partitions):
     n = _resolve_partitions(df, num_partitions)
     rp = df.repartitionByRange(n, *gcols, *ocols).withColumn(
         "__pid", F.spark_partition_id())
-    # pinned for the two-branch boundary hazard (grouped_cumsum's note).
-    # DISK_ONLY: this frame can be corpus-sized and both consumers read it
-    # exactly once more — on an 8g local heap a MEMORY_AND_DISK copy
-    # starves the downstream hash aggregates' execution pool (measured
-    # SparkOutOfMemoryError at 100M rows), while the disk round-trip is
-    # two sequential scans. Pinned BEFORE the running window (r10): the
-    # totals branch only needs the raw value columns, so persisting the
-    # pre-window frame halves the write volume (the window's cumulative
-    # columns — wide decimals on the exact path — stream straight into
-    # the consumer instead of hitting disk) and the window's sort runs
-    # once on the persisted read.
+    # pinned after the running window: the window output has two
+    # consumers (the per-(pid, group) totals and the offset join below),
+    # and both must see the SAME sampled range boundaries (the two-branch
+    # hazard of grouped_cumsum's note). DISK_ONLY: this frame can be
+    # corpus-sized and each consumer reads it once more — on an 8g local
+    # heap a MEMORY_AND_DISK copy starves the downstream hash aggregates'
+    # execution pool (measured SparkOutOfMemoryError at 100M rows), while
+    # the disk round-trip is two sequential scans.
     from pyspark import StorageLevel
     w_local = (Window.partitionBy("__pid", *gcols).orderBy(*ocols)
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    if _MC_PERSIST_PREWINDOW:
-        rp = rp.persist(StorageLevel.DISK_ONLY)
-        pinned = rp
-        local = rp
-        for i, (vc, _) in enumerate(pairs):
-            local = local.withColumn(f"__mlc_{i}", F.sum(vc).over(w_local))
-    else:
-        local = rp
-        for i, (vc, _) in enumerate(pairs):
-            local = local.withColumn(f"__mlc_{i}", F.sum(vc).over(w_local))
-        local = local.persist(StorageLevel.DISK_ONLY)
-        pinned = local
-    totals = pinned.groupBy("__pid", *gcols).agg(
+    local = rp
+    for i, (vc, _) in enumerate(pairs):
+        local = local.withColumn(f"__mlc_{i}", F.sum(vc).over(w_local))
+    local = local.persist(StorageLevel.DISK_ONLY)
+    totals = local.groupBy("__pid", *gcols).agg(
         *[F.sum(vc).alias(f"__mt_{i}") for i, (vc, _) in enumerate(pairs)])
     w_off = (Window.partitionBy(*gcols).orderBy("__pid")
              .rowsBetween(Window.unboundedPreceding, -1))
@@ -843,7 +651,7 @@ def _grouped_multi_cumsum(df, gnames, order_by, pairs, num_partitions):
                    *[f"__og_{i}" for i in range(len(gnames))],
                    *[f"__mlc_{i}" for i in range(len(pairs))],
                    *[f"__mo_{i}" for i in range(len(pairs))])
-    return attach_cached(out, pinned)
+    return attach_cached(out, local)
 
 
 def grouped_rolling_time(
@@ -931,26 +739,8 @@ def grouped_rolling_time(
                         F.explode(both).alias("__e"))
              .select(*gnames, "__src", "__e.*"))
     pairs = [("__ts", "__cs"), ("__tn", "__cn"), ("__ts2", "__cs2")]
-    # deterministic literal bucket bounds (r10, OPT-IN via
-    # _MC_USE_DETBOUNDS — r11 fix: the knob was documented but not
-    # consulted, so every call paid the eager bounds collect even though
-    # the graded x3-median favors the pinned path): no persist pin, the
-    # prefix totals aggregate straight from the source, one linear corpus
-    # pipeline — 2x faster on TRUE first runs, ~1 s slower at steady
-    # state (BASELINE.md r10 A/B). Falls back to the pinned range
-    # partition when the group space is too wide for a literal plan.
-    run = None
-    if _MC_USE_DETBOUNDS:
-        nn_agg = agg.filter(F.col(on).isNotNull())
-        run = _grouped_multi_cumsum_detbounds(
-            union, gnames, ["__key", "__isd"], pairs, num_partitions,
-            key="__key", plan_df=nn_agg, plan_key=on,
-            totals_df=nn_agg.select(*gnames, F.col(on), "__ts", "__tn",
-                                    "__ts2"),
-            totals_key=on)
-    if run is None:
-        run = _grouped_multi_cumsum(
-            union, gnames, ["__key", "__isd"], pairs, num_partitions)
+    run = _grouped_multi_cumsum(
+        union, gnames, ["__key", "__isd"], pairs, num_partitions)
     # (3) collapse each (data, anchor) pair — exactly two rows per
     # (group, on) — into frame stats via the cumulative differences
     isd = F.col("__isd") == 1

@@ -22,11 +22,13 @@ codegen) — no Python in the hot path.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import simple_tokens, word_ngrams, _token_poly_hash
-from ..util import attach_cached, ensure_parallelism, lineage_cut
+from ..util import (analyzed_size_bytes, attach_cached, ensure_parallelism,
+                    lineage_cut)
 
 # Production hashing is xxhash64 (JVM, codegen, 64-bit). ``hash_fn="poly"``
 # switches every hash in the pipeline to the ANSI-reproducible polynomial
@@ -305,41 +307,6 @@ def lsh_bucket_stats(entries: DataFrame, cap: int,
     return stats
 
 
-# r10, DEFAULT OFF — the r9 similarity.py pair-packing lever applied to
-# the minhash/simhash candidate distinct, then MEASURED NEGATIVE here
-# (same-boot sf1 A/B, BASELINE.md: plain 6.53 s vs packed 6.98 s median
-# on minhash_neardup): these pipelines' pair sets are SMALL relative to
-# the signature/shingle work, so shrinking the distinct's exchange buys
-# nothing — the lever pays only where quadratic pair OUTPUT dominates
-# (the lsh_skew fixtures it came from). Kept as a knob with the
-# row-wise id-domain guard for corpora where the pair set does blow up.
-_PAIR_PACK_DISTINCT = False
-
-
-def _packed_pair_distinct(pairs: DataFrame) -> DataFrame:
-    """DISTINCT over an (id_a, id_b) pair frame via one packed 64-bit
-    key. Requires 0 <= id < 2^32, ENFORCED row-wise with a raise_error
-    branch (out-of-range ids would silently cross-link unrelated pairs);
-    the output id columns are cast back to the input type."""
-    id_type = pairs.schema["id_a"].dataType.simpleString()
-    ok = ((F.col("id_a") >= 0) & (F.col("id_a") < F.lit(1 << 32))
-          & (F.col("id_b") >= 0) & (F.col("id_b") < F.lit(1 << 32)))
-    packed = (F.when(ok, F.shiftleft(F.col("id_a").cast("long"), 32)
-                         .bitwiseOR(F.col("id_b").cast("long")))
-              .otherwise(F.raise_error(F.lit(
-                  "pair packing requires 0 <= id < 2^32"))))
-    return (pairs.select(packed.alias("__pk")).distinct()
-            .select(F.shiftrightunsigned("__pk", 32).cast(id_type)
-                    .alias("id_a"),
-                    F.col("__pk").bitwiseAND(F.lit((1 << 32) - 1))
-                    .cast(id_type).alias("id_b")))
-
-
-def _pair_distinct(pairs: DataFrame) -> DataFrame:
-    return (_packed_pair_distinct(pairs) if _PAIR_PACK_DISTINCT
-            else pairs.distinct())
-
-
 def minhash_lsh_candidates(
     sigs: DataFrame,
     bands: int = 8,
@@ -374,15 +341,16 @@ def minhash_lsh_candidates(
         # connectivity preserved (see capped_pair_candidates)
         cand_raw = capped_pair_candidates(
             bucket_entries, ["band", "bhash"], max_bucket_size)
-        out = attach_cached(_pair_distinct(cand_raw),
+        out = attach_cached(cand_raw.distinct(),
                             *getattr(cand_raw, "_pps_cached", ()))
     else:
         a = bucket_entries.alias("a")
         b = bucket_entries.alias("b")
-        out = _pair_distinct(
+        out = (
             a.join(b, on=["band", "bhash"])
             .where(F.col("a.id") < F.col("b.id"))
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
         )
     # caller frees the bucket cache via util.release_cached once materialized
     return attach_cached(out, bucket_entries)
@@ -942,7 +910,7 @@ def _check_gram_stamp(ref_grams: DataFrame, k: int, hash_fn: str) -> None:
     contamination goes undetected). Unstamped frames pass unchecked."""
     try:
         meta = ref_grams.schema["__g"].metadata or {}
-    except Exception:
+    except KeyError:  # PySparkKeyError: no __g column
         return
     sk, sh = meta.get("pps_gram_k"), meta.get("pps_gram_hash")
     if (sk is not None and int(sk) != k) or (
@@ -1032,15 +1000,11 @@ def contaminated_spans(
         est_src = ref_grams
         try:
             plan = ref_grams._jdf.queryExecution().analyzed().toString()
-        except Exception:
+        except (Py4JError, AttributeError):
             plan = "Generate"  # unknown lineage: assume the worst
         factor = 12 if "Generate" in plan else 1
-    try:
-        size = int(est_src._jdf.queryExecution().analyzed()
-                   .stats().sizeInBytes())
-    except Exception:
-        size = -1
-    small = 0 < size * factor < (8 << 20) and size < (1 << 50)
+    size = analyzed_size_bytes(est_src)
+    small = size is not None and size * factor < (8 << 20)
     ref_side = (F.broadcast(ref_grams.select("__g")) if small
                 else ref_grams.select("__g").hint("merge"))
     hits = grams.join(ref_side, "__g", "left_semi").select(id_col, "pos")
@@ -1114,12 +1078,8 @@ def contamination_report(
     # frame comes from an explode whose Catalyst estimate is ~the
     # pre-explode ref bytes — broadcast only when the ref is provably
     # small, else pin a shuffle join and let AQE downgrade at runtime.
-    try:
-        size = int(ref._jdf.queryExecution().analyzed()
-                   .stats().sizeInBytes())
-    except Exception:
-        size = -1
-    small = 0 < size * 4 < (8 << 20) and size < (1 << 50)
+    size = analyzed_size_bytes(ref)
+    small = size is not None and size * 4 < (8 << 20)
     ref_side = (F.broadcast(ref_grams) if small
                 else ref_grams.hint("merge"))
     hits = grams.join(ref_side, "__g").select(id_col, "__suite", "pos")
@@ -1489,13 +1449,6 @@ def exact_substring_spans(
     return attach_cached(merged, arr, oversized)
 
 
-# r10 A/B knob: True computes the corpus-wide chunk multiplicity as a
-# count window over the hash (one linear pipeline, no persist) instead
-# of a count aggregate joined back (two hash exchanges + a pinned chunk
-# frame). Flippable for same-boot A/Bs; measured numbers in BASELINE.md.
-_CHUNK_DEDUP_WINDOW = True
-
-
 def chunk_dedup_stats(
     df: DataFrame,
     text_col: str,
@@ -1513,15 +1466,12 @@ def chunk_dedup_stats(
     occurs more than once corpus-wide. Returns per document:
     ``(id_col, n_chunks, n_dup_chunks, dup_chunk_frac)``.
 
-    Scale shape: chunk rows carry sha2-256 hashes (32 B) into the two
-    aggregations — bodies never shuffle; the corpus-wide count frame joins
-    back on the hash (plain equi-join, AQE decides strategy). Empty
-    documents have one empty chunk; empty chunks are EXCLUDED from the
-    duplicate counting (every empty doc would otherwise "duplicate" every
-    other) but still count toward ``n_chunks``.
+    Scale shape: chunk rows carry sha2-256 hashes (32 B) into one count
+    window over the hash and one per-document aggregation — bodies never
+    shuffle. Empty documents have one empty chunk; empty chunks are
+    EXCLUDED from the duplicate counting (every empty doc would otherwise
+    "duplicate" every other) but still count toward ``n_chunks``.
     """
-    from pyspark import StorageLevel
-
     from .packing import chunk_documents
 
     chunks = chunk_documents(
@@ -1532,49 +1482,22 @@ def chunk_dedup_stats(
         F.col("chunk_len"),
         F.sha2(F.col("chunk_text"), 256).alias("__h"),
     )
-    if _CHUNK_DEDUP_WINDOW:
-        # ONE linear pipeline (r10): the corpus-wide multiplicity is a
-        # COUNT WINDOW over the hash — exchange(__h) + streaming count —
-        # instead of a separate count aggregate joined back, which cost a
-        # second hash exchange plus a corpus-sized persist so the two
-        # consumers shared the chunk+sha2 work. Duplicate-hash groups are
-        # multiplicity-sized (the hot boilerplate hash is one task's
-        # worth of 32 B rows), so no funnel; empty chunks (all sharing
-        # sha2('')) count NULL votes only.
-        from pyspark.sql.window import Window
-        w = Window.partitionBy("__h")
-        nz = F.count(F.when(F.col("chunk_len") > 0, 1)).over(w)
-        flagged = chunks.select(
-            F.col(id_col), F.col("chunk_len"),
-            ((F.col("chunk_len") > 0) & (nz > 1)).alias("__dup"))
-        out = (
-            flagged.groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_chunks"),
-                 F.sum(F.col("__dup").cast("int")).alias("n_dup_chunks"))
-            .select(
-                id_col, "n_chunks",
-                F.col("n_dup_chunks").cast("long").alias("n_dup_chunks"),
-                (F.col("n_dup_chunks").cast("double") / F.col("n_chunks"))
-                .alias("dup_chunk_frac"),
-            )
-        )
-        return out
-    # Pin the hashed-chunk frame: the corpus-wide count and the join-back
-    # both read it, and recomputing means chunking + sha2-ing every text
-    # byte twice. Narrow rows (id, len, 32 B hash) but corpus-proportional
-    # count → DISK_ONLY per the sf100 memory-pin finding; released via
-    # release_cached.
-    chunks = chunks.persist(StorageLevel.DISK_ONLY)
-    counts = (chunks.filter(F.col("chunk_len") > 0)
-              .groupBy("__h").agg(F.count(F.lit(1)).alias("__n")))
-    joined = chunks.join(counts, "__h", "left")
-    out = (
-        joined.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum(F.when((F.col("chunk_len") > 0) & (F.col("__n") > 1), 1)
-                  .otherwise(0)).alias("n_dup_chunks"),
-        )
+    # ONE linear pipeline: the corpus-wide multiplicity is a COUNT WINDOW
+    # over the hash — exchange(__h) + streaming count — so there is no
+    # second hash exchange and no persist to share the chunk+sha2 work
+    # (BASELINE.md r10: −34% against a count aggregate joined back).
+    # Duplicate-hash groups are multiplicity-sized (the hot boilerplate
+    # hash is one task's worth of 32 B rows), so no funnel; empty chunks
+    # (all sharing sha2('')) count NULL votes only.
+    w = Window.partitionBy("__h")
+    nz = F.count(F.when(F.col("chunk_len") > 0, 1)).over(w)
+    flagged = chunks.select(
+        F.col(id_col), F.col("chunk_len"),
+        ((F.col("chunk_len") > 0) & (nz > 1)).alias("__dup"))
+    return (
+        flagged.groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("n_chunks"),
+             F.sum(F.col("__dup").cast("int")).alias("n_dup_chunks"))
         .select(
             id_col, "n_chunks",
             F.col("n_dup_chunks").cast("long").alias("n_dup_chunks"),
@@ -1582,7 +1505,6 @@ def chunk_dedup_stats(
             .alias("dup_chunk_frac"),
         )
     )
-    return attach_cached(out, chunks)
 
 
 # --------------------------------------------------------------------- #
@@ -1655,10 +1577,11 @@ def simhash_candidates(sig_df: DataFrame, quadrant_bits: int = 16,
         capped = _cap_bucket_entries(entries, ["quadrant", "qval"],
                                      max_bucket_size)
     a, b = capped.alias("a"), capped.alias("b")
-    out = _pair_distinct(
+    out = (
         a.join(b, on=["quadrant", "qval"])
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
     )
     return attach_cached(out, entries)
 

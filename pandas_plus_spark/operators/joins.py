@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import analyzed_size_bytes
+
 
 def asof_join(
     left: DataFrame,
@@ -195,11 +197,8 @@ def _exploded_size_bound(d: DataFrame, max_len: int,
     rows and OOMs the driver building the hashed relation (observed
     r14: 100k keys × 56 variants killed an 8 GB driver). ``None`` = no
     usable estimate (treat as big)."""
-    try:
-        size = int(d._jdf.queryExecution().analyzed().stats().sizeInBytes())
-    except Exception:
-        return None
-    if size <= 0 or size >= (1 << 50):
+    size = analyzed_size_bytes(d)
+    if size is None:
         return None
     factor = 1 + max_len
     if max_dist >= 2:

@@ -305,59 +305,6 @@ def bm25_scores(
     return attach_cached(out, doclens, q_postings)
 
 
-# r10 A/B knob: True fuses the unigram and bigram count passes into ONE
-# corpus explode over tokens ∪ bigrams (the vocabularies separate at
-# VOCAB grain by the joiner space, which whitespace tokens cannot
-# contain). Measured same-boot at sf1 (4 interleaved rounds,
-# BASELINE.md): fused 2.29 s median vs 2.97 s unfused (-23%), first-run
-# within noise — one corpus-sized explode+agg stage removed. Kept
-# flippable so the A/B is reproducible.
-_BIGRAM_FUSED_COUNTS = True
-
-# r13 A/B knob (VERDICT r12 item 3): True pre-aggregates (gram → count)
-# per document MAP-SIDE (sorted-run decomposition over the gram array,
-# the max_equal_run_count pattern) before both the vocab explode and the
-# scoring join, shrinking each by the per-doc repeat factor. CEILING
-# MEASURED FIRST: on the documents corpus the per-doc repeat factor is
-# 2.33 for unigrams but only 1.04 for BIGRAMS — the scoring join and the
-# bigram half of the vocab explode (the expensive halves) can shrink at
-# most ~4%, while every doc pays an interpreted array_sort + three HOF
-# lambdas. A/B at sf1 (BASELINE.md r13): the pre-agg LOSES — kept
-# flippable so the measurement is reproducible, default off.
-_BIGRAM_DOC_PREAGG = False
-
-
-def _run_count_pairs(garr):
-    """``array<struct<gram,cnt>>`` of per-array gram counts via the
-    sorted-run decomposition (map-side, no explode/shuffle — the
-    corpus.max_equal_run_count boundary trick, but keeping every run):
-    sort, find run starts by index filter, zip starts with shifted
-    starts for the lengths. NULL/empty arrays yield an empty array."""
-    from ..functions.text import let
-
-    def on_sorted(s):
-        n = F.size(s)
-
-        def on_starts(starts):
-            ends = F.concat(
-                F.slice(starts, 2, F.greatest(F.size(starts) - 1,
-                                              F.lit(0))),
-                F.array(n))
-            return F.zip_with(starts, ends, lambda b, e: F.struct(
-                F.element_at(s, b + 1).alias("gram"),
-                (e - b).cast("long").alias("cnt")))
-
-        starts = F.filter(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: (i == 0) | (F.element_at(s, i + 1)
-                                  != F.element_at(s, i)))
-        return let(starts, on_starts)
-
-    empty = F.array().cast("array<struct<gram:string,cnt:bigint>>")
-    return (F.when(F.size(garr) > 0, let(F.array_sort(garr), on_sorted))
-            .otherwise(empty))
-
-
 def bigram_lm_score(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -379,8 +326,8 @@ def bigram_lm_score(
     Returns ``(id_col, n_bigrams, xent, ppl)`` for every document;
     documents with < 2 tokens get n_bigrams 0 and NULL xent/ppl.
 
-    Scale shape: two vocabulary-sized count frames (unigrams, bigrams —
-    each one explode + partial/final agg, persisted) plus a scalar total.
+    Scale shape: one vocabulary-sized count frame over unigrams ∪ bigrams
+    (one explode + partial/final agg, persisted) plus a scalar total.
     The probability model assembles entirely at VOCABULARY grain — the
     unigram-count joins and the interpolation arithmetic land on the
     bigram-vocab frame (V rows), producing one (gram → ln p) lookup — so
@@ -388,11 +335,12 @@ def bigram_lm_score(
     the shuffle keyed on ``id_col`` for the per-doc mean. At web scale the
     bigram vocabulary can outgrow broadcast — drop the hints and AQE falls
     back to a shuffled join; the per-doc shape is unchanged. Release the
-    persisted count frames with ``util.release_cached``.
+    persisted count frame with ``util.release_cached``.
     """
     # Tokenize ONCE (DISK_ONLY pin — same reasoning as unigram_lm_score:
-    # the regex pass dominates, three consumers explode the same tokens,
-    # and a corpus-sized MEMORY pin starves executors at sf100).
+    # the regex pass dominates, two consumers (the fused count and the
+    # scoring rows) explode the same tokens, and a corpus-sized MEMORY
+    # pin starves executors at sf100).
     toks_df = (
         ensure_parallelism(docs)
         .select(F.col(id_col), tx.simple_tokens(text_col).alias("__toks"))
@@ -408,43 +356,15 @@ def bigram_lm_score(
     # (unigram side, bigram side, scalar total), and the eager
     # materialization feeds AQE exact stats for the model join (the r9
     # measured finding that dropping the counts persist REGRESSED run0).
-    if _BIGRAM_DOC_PREAGG:
-        pairs = _run_count_pairs(
-            F.concat(F.col("__toks"), F.coalesce(
-                tx.word_ngrams(F.col("__toks"), 2),
-                F.array().cast("array<string>"))))
-        counts = (
-            toks_df.select(F.explode(pairs).alias("p"))
-            .groupBy(F.col("p.gram").alias("gram"))
-            .agg(F.sum("p.cnt").alias("cnt"))
-        )
-        counts = lineage_cut(counts)
-        uni = counts.filter(~F.col("gram").contains(" ")).select(
-            F.col("gram").alias("term"), F.col("cnt").alias("ucnt"))
-        bi_counts = counts.filter(F.col("gram").contains(" ")).select(
-            "gram", F.col("cnt").alias("bcnt"))
-        cached = (counts,)
-    elif _BIGRAM_FUSED_COUNTS:
-        counts = (
-            toks_df.select(F.explode(
-                F.concat(F.col("__toks"),
-                         tx.word_ngrams(F.col("__toks"), 2))).alias("gram"))
-            .groupBy("gram").agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        counts = lineage_cut(counts)
-        uni = counts.filter(~F.col("gram").contains(" ")).select(
-            F.col("gram").alias("term"), F.col("cnt").alias("ucnt"))
-        bi_counts = counts.filter(F.col("gram").contains(" ")).select(
-            "gram", F.col("cnt").alias("bcnt"))
-        cached = (counts,)
-    else:
-        uni = lineage_cut(
-            toks_df.select(F.explode("__toks").alias("term"))
-            .groupBy("term").agg(F.count(F.lit(1)).alias("ucnt")))
-        bi_counts = lineage_cut(toks_df.select(
-            F.explode(tx.word_ngrams(F.col("__toks"), 2)).alias("gram"))
-            .groupBy("gram").agg(F.count(F.lit(1)).alias("bcnt")))
-        cached = (uni, bi_counts)
+    counts = lineage_cut(
+        toks_df.select(F.explode(
+            F.concat(F.col("__toks"),
+                     tx.word_ngrams(F.col("__toks"), 2))).alias("gram"))
+        .groupBy("gram").agg(F.count(F.lit(1)).alias("cnt")))
+    uni = counts.filter(~F.col("gram").contains(" ")).select(
+        F.col("gram").alias("term"), F.col("cnt").alias("ucnt"))
+    bi_counts = counts.filter(F.col("gram").contains(" ")).select(
+        "gram", F.col("cnt").alias("bcnt"))
     total = uni.select(F.sum("ucnt").cast("double").alias("__total"))
 
     # Scoring rows = bigrams PLUS one sentinel row ('' — never a token,
@@ -454,25 +374,12 @@ def bigram_lm_score(
     # left-join back to the id list (a whole extra corpus-pin read +
     # join stage) disappears. Same-boot 4-round A/B at sf1: median
     # 1.61 s vs 1.96 s, first run 1.51 vs 1.56 (BASELINE.md r11).
-    if _BIGRAM_DOC_PREAGG:
-        # sentinel struct (gram '', cnt 0) keeps every doc represented;
-        # weights fold the per-doc repeats into the aggregate below
-        sentinel_p = F.array(F.struct(
-            F.lit("").alias("gram"), F.lit(0).cast("long").alias("cnt")))
-        bi_rows = toks_df.select(
-            F.col(id_col),
-            F.explode(F.concat(sentinel_p, _run_count_pairs(F.coalesce(
-                tx.word_ngrams(F.col("__toks"), 2),
-                F.array().cast("array<string>"))))).alias("p")
-        ).select(id_col, F.col("p.gram").alias("gram"),
-                 F.col("p.cnt").alias("__w"))
-    else:
-        sentinel = F.array(F.lit(""))
-        bi_rows = toks_df.select(
-            F.col(id_col),
-            F.explode(F.concat(sentinel, F.coalesce(
-                tx.word_ngrams(F.col("__toks"), 2),
-                F.array().cast("array<string>")))).alias("gram"))
+    sentinel = F.array(F.lit(""))
+    bi_rows = toks_df.select(
+        F.col(id_col),
+        F.explode(F.concat(sentinel, F.coalesce(
+            tx.word_ngrams(F.col("__toks"), 2),
+            F.array().cast("array<string>")))).alias("gram"))
 
     # whitespace tokens cannot contain the joiner — split is exact
     lam = float(lam)
@@ -493,22 +400,11 @@ def bigram_lm_score(
     )
     # LEFT join: every observed bigram matches the model (trained on the
     # same corpus), only the sentinel rows miss — count(__lnp) is the
-    # exact bigram count and avg skips the sentinel's NULL. (Pre-agg
-    # variant: counts become weights — n = Σcnt, mean = Σcnt·lnp / Σcnt;
-    # the sentinel's cnt 0 contributes to neither.)
+    # exact bigram count and avg skips the sentinel's NULL.
     joined = bi_rows.join(F.broadcast(gram_model), "gram", "left")
-    if _BIGRAM_DOC_PREAGG:
-        agged = joined.groupBy(id_col).agg(
-            F.coalesce(F.sum(F.when(F.col("__lnp").isNotNull(),
-                                    F.col("__w"))),
-                       F.lit(0)).cast("long").alias("n_bigrams"),
-            (F.sum(F.col("__w") * F.col("__lnp"))
-             / F.sum(F.when(F.col("__lnp").isNotNull(), F.col("__w"))))
-            .alias("__mlnp"))
-    else:
-        agged = joined.groupBy(id_col).agg(
-            F.count("__lnp").cast("long").alias("n_bigrams"),
-            F.avg("__lnp").alias("__mlnp"))
+    agged = joined.groupBy(id_col).agg(
+        F.count("__lnp").cast("long").alias("n_bigrams"),
+        F.avg("__lnp").alias("__mlnp"))
     out = (
         agged
         .select(
@@ -518,4 +414,4 @@ def bigram_lm_score(
             F.when(F.col("n_bigrams") > 0, F.exp(-F.col("__mlnp"))).alias("ppl"),
         )
     )
-    return attach_cached(out, *cached, toks_df)
+    return attach_cached(out, counts, toks_df)

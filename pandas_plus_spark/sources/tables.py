@@ -73,10 +73,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             # `div`, NOT `/`: epoch-ns (~1.7e18) exceeds double's 2^53

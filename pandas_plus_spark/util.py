@@ -105,6 +105,27 @@ def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     return out
 
 
+def analyzed_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of ``df``'s ANALYZED plan, in bytes, or
+    ``None`` when the size is unknown.
+
+    The analyzed (not optimized) plan's stats: the basic size-only visitor
+    gives the same estimate through Project/Filter nodes and skips
+    re-running the optimizer driver-side (measured 1–2 ms vs 10–270 ms per
+    call at sf0.1). Unknown means no JVM handle or plan stats
+    (``Py4JError``/``AttributeError``, as in :func:`lineage_cut`), no
+    estimate (``<= 0``, an empty local relation) or the "unknown" sentinel
+    (``>= 2^50``: ``spark.sql.defaultSizeInBytes`` = Long.MAX propagates
+    through plans Catalyst cannot size)."""
+    try:
+        size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+    except (Py4JError, AttributeError):
+        return None
+    if size <= 0 or size >= (1 << 50):
+        return None
+    return size
+
+
 def attach_cached(out: DataFrame, *cached: DataFrame) -> DataFrame:
     """Record the persisted intermediates an operator's result depends on.
 

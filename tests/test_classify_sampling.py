@@ -82,30 +82,6 @@ class TestClassifier:
 
 
 class TestBigramLM:
-    def test_preagg_variant_equivalent(self, docs):
-        """The r13 A/B flag path (per-doc sorted-run gram-count pre-agg)
-        must stay value-equivalent to the default occurrence-explode
-        path — it LOST the A/B (BASELINE.md r13: bigram repeat factor
-        1.04 bounds the win at ~4%, interpreted HOFs cost +64% at sf10)
-        but stays flippable for reproducibility."""
-        from pandas_plus_spark.operators import ranking as R
-        base = {r["doc_id"]: r for r in
-                ranking.bigram_lm_score(docs, "doc_id", "text").collect()}
-        R._BIGRAM_DOC_PREAGG = True
-        try:
-            alt = {r["doc_id"]: r for r in
-                   ranking.bigram_lm_score(docs, "doc_id", "text").collect()}
-        finally:
-            R._BIGRAM_DOC_PREAGG = False
-        assert base.keys() == alt.keys()
-        for k in base:
-            assert base[k]["n_bigrams"] == alt[k]["n_bigrams"], k
-            for c in ("xent", "ppl"):
-                if base[k][c] is None:
-                    assert alt[k][c] is None, k
-                else:
-                    assert abs(base[k][c] - alt[k][c]) < 1e-9, k
-
     def test_values_match_python(self, docs, spark):
         lam = 0.8
         out = ranking.bigram_lm_score(docs, "doc_id", "text", lam=lam)

@@ -605,34 +605,6 @@ class TestGroupedRollingTime:
                     assert a == pytest.approx(b, rel=1e-9, abs=1e-9), \
                         (k, window)
 
-    @pytest.mark.parametrize("n", [2, 16])
-    def test_detbounds_path_matches(self, tframe, n):
-        """The opt-in deterministic-literal-bounds pipeline (r10,
-        _MC_USE_DETBOUNDS — no persist pin, totals from the source)
-        returns exactly the pinned path's rows."""
-        from pandas_plus_spark.functions import ordered
-        kw = dict(funcs=("sum", "mean", "count", "var"), min_periods=2,
-                  num_partitions=n)
-        base = ordered.grouped_rolling_time(
-            tframe, ["g"], "ts", "v", 7, **kw)
-        want = {r.rid: (r.v_tsum, r.v_tmean, r.v_tcount, r.v_tvar)
-                for r in base.collect()}
-        old = ordered._MC_USE_DETBOUNDS
-        ordered._MC_USE_DETBOUNDS = True
-        try:
-            got = {r.rid: (r.v_tsum, r.v_tmean, r.v_tcount, r.v_tvar)
-                   for r in ordered.grouped_rolling_time(
-                       tframe, ["g"], "ts", "v", 7, **kw).collect()}
-        finally:
-            ordered._MC_USE_DETBOUNDS = old
-        assert set(got) == set(want)
-        for k in want:
-            for a, b in zip(got[k], want[k]):
-                if b is None:
-                    assert a is None, k
-                else:
-                    assert a == pytest.approx(b, rel=1e-12, abs=1e-12), k
-
     def test_validation(self, spark):
         from pandas_plus_spark.functions.ordered import grouped_rolling_time
         e = spark.createDataFrame([], "rid long, g string, ts double, v double")

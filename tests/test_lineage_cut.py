@@ -10,7 +10,8 @@ Pins the four contracts the optimization relies on:
 4. no silent leak — when the checkpointed RDD cannot be reached (so
    release_cached cannot free it), lineage_cut warns;
 
-plus the r15 ADVICE regression: _zip_array_key's positional reconstruction
+plus util.analyzed_size_bytes, which shares lineage_cut's narrow catch
+(stub frames, no session), and the r15 ADVICE regression: _zip_array_key's positional reconstruction
 (spark_partition_id + monotonically_increasing_id) stays correct on a
 PERSISTED upstream frame with canChangeCachedPlanOutputPartitioning=true
 (the engine default since r15) — the cache-layout consistency assumption,
@@ -20,7 +21,8 @@ made executable.
 import pyspark.sql.functions as F
 import pytest
 
-from pandas_plus_spark.util import attach_cached, lineage_cut, release_cached
+from pandas_plus_spark.util import (analyzed_size_bytes, attach_cached,
+                                    lineage_cut, release_cached)
 
 
 class TestLineageCut:
@@ -111,6 +113,48 @@ class TestLineageCut:
         codes = {f.code for f in lint(out)}
         assert "row-udf" in codes
         release_cached(out)
+
+
+class _SizedFrame:
+    """Stub frame whose analyzed-plan stats report ``size``, or raise it
+    when it is an exception."""
+
+    def __init__(self, size):
+        self._jdf = self
+        self.size = size
+
+    def queryExecution(self):
+        return self
+
+    def analyzed(self):
+        return self
+
+    def stats(self):
+        return self
+
+    def sizeInBytes(self):
+        if isinstance(self.size, BaseException):
+            raise self.size
+        return self.size
+
+
+class TestAnalyzedSizeBytes:
+    def test_known_size(self):
+        assert analyzed_size_bytes(_SizedFrame(18000)) == 18000
+
+    def test_unknown_size_is_none(self):
+        # empty local relation (0) and Spark's Long.MAX "unknown" sentinel
+        assert analyzed_size_bytes(_SizedFrame(0)) is None
+        assert analyzed_size_bytes(_SizedFrame((1 << 63) - 1)) is None
+        assert analyzed_size_bytes(_SizedFrame(1 << 50)) is None
+
+    def test_py4j_error_is_none(self):
+        from py4j.protocol import Py4JError
+        assert analyzed_size_bytes(_SizedFrame(Py4JError("no stats"))) is None
+
+    def test_other_errors_propagate(self):
+        with pytest.raises(RuntimeError, match="bug"):
+            analyzed_size_bytes(_SizedFrame(RuntimeError("bug")))
 
 
 class TestZipArrayKeyOnCachedUpstream:
