@@ -1,17 +1,24 @@
-"""Distributed GLOBAL ordered operators — no partition key, no bottleneck.
+"""Distributed ordered operators — no partition key, no bottleneck.
 
 A window with ORDER BY but no PARTITION BY funnels every row through one
 task (`WindowExec: No Partition Defined`) — the classic Spark scale-killer
 for globally-ordered computations (running totals, global row numbers,
-exact quantile tiles). These operators decompose the global order into the
-two-phase pattern:
+exact quantile tiles) — and ``Window.partitionBy(group)`` does the same to
+each group when groups are few and huge. Every operator here rides ONE
+two-phase pass, :func:`_two_phase`, the one place in this module that
+range-partitions and pins a frame:
 
-1. ``repartitionByRange`` on the order keys — partition i holds a
-   contiguous key range, all ranges ordered end-to-end;
-2. the ordered computation runs per partition (parallel), plus a
-   prefix-offset correction computed from ONE tiny row-per-partition frame
-   (its unpartitioned window is over ≤ num_partitions rows, harmless at
-   any data size) broadcast back.
+1. ``repartitionByRange`` on the (group, order) keys — partition i holds a
+   contiguous key range, all ranges ordered end-to-end, and a huge group
+   spans many consecutive partitions;
+2. the ordered computation runs per (partition, group) (parallel), plus a
+   carry computed from ONE tiny row-per-(partition, group) boundary frame
+   (its window over the preceding partitions is over ≤ num_partitions
+   rows per group, harmless at any data size) broadcast back.
+
+The global operators are that pass with no group columns. Rolling, shift
+and rank add one row-offset self-join on (group, row number ± k),
+:func:`_offset_join`.
 
 Semantics match the single-window equivalent exactly when the order keys
 are a total order; under ties, per-row outputs are tie-order-dependent in
@@ -24,6 +31,7 @@ here order is explicit columns, per SURVEY §7.4 R12.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -35,6 +43,16 @@ def _order_cols(order_by) -> list[Column]:
     if isinstance(order_by, (list, tuple)):
         return [F.col(c) if isinstance(c, str) else c for c in order_by]
     return [F.col(order_by) if isinstance(order_by, str) else order_by]
+
+
+def _running(w):
+    """``w`` framed to the running prefix: rows up to and including this
+    one."""
+    return w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+
+def _names(group_by) -> list[str]:
+    return [group_by] if isinstance(group_by, str) else list(group_by)
 
 
 #: Auto-parallelism targets (r13 driver-grain A/B, BASELINE.md): the range
@@ -73,13 +91,6 @@ def _resolve_partitions(df: DataFrame, num_partitions: int | None) -> int:
     return min(want, cap)
 
 
-def _ranged(df: DataFrame, order_by, num_partitions: int | None):
-    cols = _order_cols(order_by)
-    n = _resolve_partitions(df, num_partitions)
-    rp = df.repartitionByRange(n, *cols)
-    return rp.withColumn("__pid", F.spark_partition_id()), cols
-
-
 def _sum_zero(df: DataFrame, value: str) -> Column:
     """Additive zero literal that preserves the SUM type of ``value``.
 
@@ -98,6 +109,137 @@ def _sum_zero(df: DataFrame, value: str) -> Column:
     return F.lit(0.0)
 
 
+def _prefix_sum(local: str, carry: str, zero: Column) -> Column:
+    """``local + carry`` with window-sum null semantics: NULL iff the whole
+    prefix is null (the local prefix AND every earlier partition's total);
+    otherwise nulls are skipped — each side coalesced to ``zero``."""
+    lc, oc = F.col(local), F.col(carry)
+    return F.when(lc.isNull() & oc.isNull(), F.lit(None)).otherwise(
+        F.coalesce(lc, zero) + F.coalesce(oc, zero))
+
+
+def _group_keys(gnames, prefix: str):
+    """The group columns renamed ``{prefix}0, {prefix}1, ...`` for the
+    other side of a join, and those names (dropped after it)."""
+    names = [f"{prefix}{i}" for i in range(len(gnames))]
+    return [F.col(g).alias(a) for g, a in zip(gnames, names)], names
+
+
+def _group_match(gnames, aliases, cond: Column | None = None) -> Column:
+    """``cond`` AND a null-safe match of every group column with its alias
+    on the other side of the join (a NULL group key is a group like any
+    other, and can span partitions)."""
+    for g, a in zip(gnames, aliases):
+        m = F.col(g).eqNullSafe(F.col(a))
+        cond = m if cond is None else cond & m
+    return cond
+
+
+def _inherit(out: DataFrame, *srcs: DataFrame) -> DataFrame:
+    """``out`` holding the pinned intermediates of the frames it derives
+    from: every DataFrame method returns a new frame without their
+    handles, and ``release_cached`` on a frame without them frees
+    nothing."""
+    return attach_cached(
+        out, *[h for s in srcs for h in getattr(s, "_pps_cached", ())])
+
+
+def _two_phase(df, gnames, order_by, num_partitions, local, bounds, carry,
+               combine, backward: bool = False,
+               storage=StorageLevel.MEMORY_AND_DISK_DESER) -> DataFrame:
+    """The range-partition pass every operator of this module rides.
+
+    ``repartitionByRange`` on ``(*gnames, *order_by)`` and a ``__pid``
+    partition tag; ``local(w)`` gives the per-partition window columns
+    ``[(name, col)]`` over ``w`` = the (partition, group) rows in order;
+    that frame is pinned; ``bounds`` aggregates it to ONE row per
+    (partition, group); ``carry(w)`` gives ``[(name, col)]`` over ``w`` =
+    the same group's PRECEDING partitions of that boundary frame, which
+    is broadcast and null-safe-joined back; ``combine`` (``[(name,
+    col)]``) computes the outputs from the local and carry columns, which
+    are then dropped with the pass's own scratch columns. ``backward``
+    reverses the local order and the carry direction. With no group
+    columns it is the global pass (one carry over all partitions)."""
+    gcols = [F.col(g) for g in gnames]
+    ocols = _order_cols(order_by)
+    n = _resolve_partitions(df, num_partitions)
+    rp = df.repartitionByRange(n, *gcols, *ocols).withColumn(
+        "__pid", F.spark_partition_id())
+    w_local = Window.partitionBy("__pid", *gcols).orderBy(
+        *([c.desc() for c in ocols] if backward else ocols))
+    lcols = local(w_local)
+    pinned = rp
+    for name, col in lcols:
+        pinned = pinned.withColumn(name, col)
+    # PINNED: repartitionByRange samples its boundaries per execution, and
+    # this frame feeds TWO plan branches (the rows and the boundary
+    # frame). Unpinned, each branch can re-execute the exchange with
+    # different sampled boundaries — __pid then disagrees between the
+    # branches and the carries corrupt the result. The pin makes both
+    # branches read one materialization (the same hazard class as dedup's
+    # bucket self-joins; released via util.release_cached).
+    #
+    # persist(), NOT util.lineage_cut (r16 measured decision): the frame is
+    # the FULL input plus its window columns, and a localCheckpoint
+    # replaces the columnar InMemoryRelation scan with a row-format
+    # LogicalRDD — a per-row cost that scales with the data (same-boot
+    # order-reversed A/B: group_rank_scale 1.64 -> 1.95 s, token_budget
+    # 0.79 -> 0.88 s with the cut, both halves consistent) for a
+    # planning-only win. Cuts stay on the small-by-construction frames
+    # (LSH entries, vocab counts) where the trade runs the other way.
+    #
+    # Fault-tolerance trade: persist() is NOT a barrier against the
+    # boundary hazard above. If a cached block is lost (executor loss,
+    # eviction), Spark recomputes that partition from lineage — which
+    # re-samples the range boundaries, so the recomputed rows can carry a
+    # different __pid than the surviving blocks and the result is
+    # silently wrong. A localCheckpoint fails the job loudly instead (see
+    # util.lineage_cut's "not fault-tolerant" note). At cluster scale
+    # these pins want a deterministic partition key.
+    pinned = pinned.persist(storage)
+    w_carry = (Window.partitionBy(*gcols)
+               .orderBy(F.col("__pid").desc() if backward else F.col("__pid"))
+               .rowsBetween(Window.unboundedPreceding, -1))
+    ccols = carry(w_carry)
+    og, og_names = _group_keys(gnames, "__og_")
+    offs = pinned.groupBy("__pid", *gcols).agg(*bounds).select(
+        F.col("__pid").alias("__opid"), *og,
+        *[col.alias(name) for name, col in ccols])
+    # each (partition, group) of the pinned rows has exactly one boundary
+    # row, so the join neither drops nor repeats rows; a group's first
+    # partition reads NULL carries (nothing precedes it)
+    out = pinned.join(
+        F.broadcast(offs),
+        _group_match(gnames, og_names, F.col("__pid") == F.col("__opid")),
+        "left")
+    for name, col in combine:
+        out = out.withColumn(name, col)
+    out = out.drop("__pid", "__opid", *og_names,
+                   *[name for name, _ in lcols], *[name for name, _ in ccols])
+    return attach_cached(out, pinned)
+
+
+def _offset_join(run, gnames, rn: str, k: int, take: dict, outputs,
+                 scratch=()) -> DataFrame:
+    """Left self-join of ``run`` on (group, ``rn`` − k): every row meets
+    the row k places before it in its group (after it for k < 0) and
+    reads that row's columns ``take`` = ``{column: alias}`` (NULL when
+    there is none). A plain hash join on a narrow projection — no
+    per-group lag window, parallelism = partition count, any |k|.
+    ``outputs`` (``[(name, col)]``) are computed from both sides; ``rn``,
+    the aliases and ``scratch`` are dropped."""
+    jg, jg_names = _group_keys(gnames, "__jg_")
+    right = run.select(*jg, (F.col(rn) + F.lit(k)).alias("__jrn"),
+                       *[F.col(c).alias(a) for c, a in take.items()])
+    out = run.join(
+        right, _group_match(gnames, jg_names, F.col(rn) == F.col("__jrn")),
+        "left")
+    for name, col in outputs:
+        out = out.withColumn(name, col)
+    return _inherit(
+        out.drop(rn, "__jrn", *jg_names, *take.values(), *scratch), run)
+
+
 def global_row_number(
     df: DataFrame,
     order_by,
@@ -108,46 +250,8 @@ def global_row_number(
 
     Within-partition ``row_number`` + the cumulative count of earlier
     partitions (a broadcast of one row per partition)."""
-    rp, cols = _ranged(df, order_by, num_partitions)
-    # PINNED: repartitionByRange samples its boundaries per execution, and
-    # this frame feeds TWO plan branches (the rows and the per-partition
-    # counts). Unpinned, each branch can re-execute the exchange with
-    # different sampled boundaries — __pid then disagrees between branches
-    # and the offsets corrupt the numbering. persist() makes both branches
-    # read one materialization (the same hazard class as dedup's bucket
-    # self-joins; released via util.release_cached).
-    #
-    # persist(), NOT util.lineage_cut (r16 measured decision, applies to
-    # every data-sized `local` pin in this module): these frames are the
-    # FULL input plus a running column, and a localCheckpoint replaces
-    # the columnar InMemoryRelation scan with a row-format LogicalRDD —
-    # a per-row cost that scales with the data (same-boot order-reversed
-    # A/B: group_rank_scale 1.64 -> 1.95 s, token_budget 0.79 -> 0.88 s
-    # with the cut, both halves consistent) for a planning-only win.
-    # Cuts stay on the small-by-construction frames (LSH entries, vocab
-    # counts) where the trade runs the other way.
-    #
-    # Fault-tolerance trade: persist() is NOT a barrier against the
-    # boundary hazard above. If a cached block is lost (executor loss,
-    # eviction), Spark recomputes that partition from lineage — which
-    # re-samples the range boundaries, so the recomputed rows can carry a
-    # different __pid than the surviving blocks and the numbering is
-    # silently wrong. A localCheckpoint fails the job loudly instead (see
-    # util.lineage_cut's "not fault-tolerant" note). At cluster scale
-    # these pins want a deterministic partition key.
-    local = rp.withColumn(
-        "__lrn", F.row_number().over(Window.partitionBy("__pid").orderBy(*cols))
-    ).persist()
-    counts = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "__pid", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"))
-    out_df = (
-        local.join(F.broadcast(offs), "__pid")
-        .withColumn(out, (F.col("__lrn") + F.col("__off")).cast("long"))
-        .drop("__pid", "__lrn", "__off")
-    )
-    return attach_cached(out_df, local)
+    return grouped_row_number(df, [], order_by, out=out,
+                              num_partitions=num_partitions)
 
 
 def global_cumsum(
@@ -162,32 +266,8 @@ def global_cumsum(
     Within-partition running sum + the prefix sum of whole-partition
     totals. One data shuffle (the range partitioning); the offset frame is
     one row per partition."""
-    rp, cols = _ranged(df, order_by, num_partitions)
-    v = F.col(value) if isinstance(value, str) else value
-    w_local = (Window.partitionBy("__pid").orderBy(*cols)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    # pinned for the same two-branch boundary-divergence hazard as
-    # global_row_number (totals must see the SAME __pid as the rows);
-    # persist, not lineage_cut: data-sized (see global_row_number)
-    local = rp.withColumn("__lcum", F.sum(v).over(w_local)).persist()
-    totals = local.groupBy("__pid").agg(F.sum(v).alias("__tot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__pid", F.sum("__tot").over(w_off).alias("__off"))
-    # window-sum null semantics: NULL iff the whole global prefix is null
-    # (local prefix null AND every earlier partition total null); otherwise
-    # nulls are skipped — coalesce each side to 0 before adding.
-    cum = F.when(
-        F.col("__lcum").isNull() & F.col("__off").isNull(), F.lit(None)
-    ).otherwise(
-        F.coalesce(F.col("__lcum"), F.lit(0)) + F.coalesce(F.col("__off"), F.lit(0))
-    )
-    out_df = (
-        local.join(F.broadcast(offs), "__pid")
-        .withColumn(out, cum)
-        .drop("__pid", "__lcum", "__off")
-    )
-    return attach_cached(out_df, local)
+    return grouped_cumsum(df, [], order_by, value, out=out,
+                          num_partitions=num_partitions)
 
 
 def grouped_cumsum(
@@ -210,42 +290,13 @@ def grouped_cumsum(
     most ``n_partitions × groups-spanned`` rows, broadcast back. Same
     two-phase shape, same null semantics, any group cardinality.
     """
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    gcols = [F.col(c) for c in gnames]  # group_by: column NAMES (join keys)
-    ocols = _order_cols(order_by)
-    n = _resolve_partitions(df, num_partitions)
-    rp = df.repartitionByRange(n, *gcols, *ocols).withColumn(
-        "__pid", F.spark_partition_id())
     v = F.col(value) if isinstance(value, str) else value
-    # pinned: the rows and the per-(pid, group) totals must see the SAME
-    # sampled range boundaries (the global_row_number two-branch hazard)
-    w_local = (Window.partitionBy("__pid", *gcols).orderBy(*ocols)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    local = rp.withColumn("__lcum", F.sum(v).over(w_local)).persist()
-    totals = local.groupBy("__pid", *gcols).agg(F.sum(v).alias("__tot"))
-    w_off = (Window.partitionBy(*gcols).orderBy("__pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = totals.select(
-        F.col("__pid").alias("__opid"),
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(gnames)],
-        F.sum("__tot").over(w_off).alias("__off"))
-    # null-safe group match (a NULL group key is a group like any other and
-    # can span partitions); left join keeps first-partition rows (__off null)
-    cond = F.col("__pid") == F.col("__opid")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__og_{i}"))
-    cum = F.when(
-        F.col("__lcum").isNull() & F.col("__off").isNull(), F.lit(None)
-    ).otherwise(
-        F.coalesce(F.col("__lcum"), F.lit(0)) + F.coalesce(F.col("__off"), F.lit(0))
-    )
-    out_df = (
-        local.join(F.broadcast(offs), cond, "left")
-        .withColumn(out, cum)
-        .drop("__pid", "__lcum", "__off", "__opid",
-              *[f"__og_{i}" for i in range(len(gnames))])
-    )
-    return attach_cached(out_df, local)
+    return _two_phase(
+        df, _names(group_by), order_by, num_partitions,
+        local=lambda w: [("__lcum", F.sum(v).over(_running(w)))],
+        bounds=[F.sum(v).alias("__tot")],
+        carry=lambda w: [("__off", F.sum("__tot").over(w))],
+        combine=[(out, _prefix_sum("__lcum", "__off", F.lit(0)))])
 
 
 def grouped_row_number(
@@ -267,40 +318,20 @@ def grouped_row_number(
     Range partition on ``(group, order)``; local row_number per
     ``(partition, group)``; ONE tiny count row per (partition, group)
     yields both the prefix offset and the group total, broadcast back."""
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    gcols = [F.col(c) for c in gnames]
-    ocols = _order_cols(order_by)
-    n = _resolve_partitions(df, num_partitions)
-    rp = df.repartitionByRange(n, *gcols, *ocols).withColumn(
-        "__pid", F.spark_partition_id())
-    # pinned: the rows and the per-(pid, group) counts must see the SAME
-    # sampled range boundaries (the global_row_number two-branch hazard)
-    local = rp.withColumn(
-        "__lrn",
-        F.row_number().over(Window.partitionBy("__pid", *gcols).orderBy(*ocols))
-    ).persist()
-    counts = local.groupBy("__pid", *gcols).agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = (Window.partitionBy(*gcols).orderBy("__pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    w_tot = (Window.partitionBy(*gcols)
-             .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    offs = counts.select(
-        F.col("__pid").alias("__opid"),
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(gnames)],
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__cnt").over(w_tot).alias("__tot"))
-    cond = F.col("__pid") == F.col("__opid")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__og_{i}"))
-    out_df = (
-        local.join(F.broadcast(offs), cond)
-        .withColumn(out, (F.col("__lrn") + F.col("__off")).cast("long"))
-    )
+    gnames = _names(group_by)
+    w_tot = Window.partitionBy(*gnames).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)
+    combine = [(out, (F.col("__lrn") + F.col("__off")).cast("long"))]
     if size is not None:
-        out_df = out_df.withColumn(size, F.col("__tot").cast("long"))
-    out_df = out_df.drop("__pid", "__lrn", "__off", "__tot", "__opid",
-                         *[f"__og_{i}" for i in range(len(gnames))])
-    return attach_cached(out_df, local)
+        combine.append((size, F.col("__tot").cast("long")))
+    return _two_phase(
+        df, gnames, order_by, num_partitions,
+        local=lambda w: [("__lrn", F.row_number().over(w))],
+        bounds=[F.count(F.lit(1)).alias("__cnt")],
+        carry=lambda w: [
+            ("__off", F.coalesce(F.sum("__cnt").over(w), F.lit(0))),
+            ("__tot", F.sum("__cnt").over(w_tot))],
+        combine=combine)
 
 
 def grouped_take(
@@ -334,7 +365,7 @@ def grouped_take(
     cond = conds[0]
     for c in conds[1:]:
         cond = cond | c
-    return rn.filter(cond).drop("__grn", "__gsz")
+    return _inherit(rn.filter(cond).drop("__grn", "__gsz"), rn)
 
 
 def grouped_ffill(
@@ -365,44 +396,20 @@ def grouped_ffill(
     carry. Null semantics identical to the window form: rows before any
     observation anywhere stay NULL; a NULL group key is a group like any
     other."""
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    gcols = [F.col(c) for c in gnames]
-    ocols = _order_cols(order_by)
-    n = _resolve_partitions(df, num_partitions)
     out = out or f"{value}_{'bfill' if backward else 'ffill'}"
-    rp = df.repartitionByRange(n, *gcols, *ocols).withColumn(
-        "__pid", F.spark_partition_id())
-    v = F.col(value)
-    local_order = [c.desc() for c in ocols] if backward else ocols
-    # pinned: rows and the per-(pid, group) boundary frame must see the
-    # SAME sampled range boundaries (the global_row_number two-branch
-    # hazard) — hence the persist
-    w_local = (Window.partitionBy("__pid", *gcols).orderBy(*local_order)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    local = rp.withColumn(
-        "__lff", F.last(v, ignorenulls=True).over(w_local)).persist()
     # the partition's boundary fill = the local fill at its max-order row
     # (min-order row for backward)
     boundary_pick = F.min_by if backward else F.max_by
-    lastnn = local.groupBy("__pid", *gcols).agg(
-        boundary_pick("__lff", F.struct(*ocols)).alias("__lastnn"))
-    carry_order = F.col("__pid").desc() if backward else F.col("__pid")
-    w_carry = (Window.partitionBy(*gcols).orderBy(carry_order)
-               .rowsBetween(Window.unboundedPreceding, -1))
-    carries = lastnn.select(
-        F.col("__pid").alias("__opid"),
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(gnames)],
-        F.last("__lastnn", ignorenulls=True).over(w_carry).alias("__carry"))
-    cond = F.col("__pid") == F.col("__opid")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__og_{i}"))
-    out_df = (
-        local.join(F.broadcast(carries), cond, "left")
-        .withColumn(out, F.coalesce(F.col("__lff"), F.col("__carry")))
-        .drop("__pid", "__lff", "__carry", "__opid",
-              *[f"__og_{i}" for i in range(len(gnames))])
-    )
-    return attach_cached(out_df, local)
+    return _two_phase(
+        df, _names(group_by), order_by, num_partitions,
+        local=lambda w: [("__lff", F.last(F.col(value), ignorenulls=True)
+                          .over(_running(w)))],
+        bounds=[boundary_pick("__lff", F.struct(*_order_cols(order_by)))
+                .alias("__lastnn")],
+        carry=lambda w: [("__carry", F.last("__lastnn", ignorenulls=True)
+                          .over(w))],
+        combine=[(out, F.coalesce(F.col("__lff"), F.col("__carry")))],
+        backward=backward)
 
 
 def _grouped_running(df, gnames, order_by, value, num_partitions,
@@ -411,63 +418,37 @@ def _grouped_running(df, gnames, order_by, value, num_partitions,
     1-based row number ``__rn``, the null-skipping running sum ``__C``
     and the non-null running count ``__N`` (plus the running sum of
     squares ``__C2`` when ``want_sq``) — the prefix state every
-    difference-based rolling/shift/expanding operator needs. Same
-    two-phase shape and pinning rationale as :func:`grouped_cumsum`."""
-    gcols = [F.col(c) for c in gnames]
-    ocols = _order_cols(order_by)
-    n = _resolve_partitions(df, num_partitions)
-    rp = df.repartitionByRange(n, *gcols, *ocols).withColumn(
-        "__pid", F.spark_partition_id())
+    difference-based rolling/shift/expanding operator needs."""
     v = F.col(value)
-    w_run = (Window.partitionBy("__pid", *gcols).orderBy(*ocols)
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_rn = Window.partitionBy("__pid", *gcols).orderBy(*ocols)
-    local = (rp.withColumn("__lrn", F.row_number().over(w_rn))
-             .withColumn("__lC", F.sum(v).over(w_run))
-             .withColumn("__lN", F.count(v).over(w_run)))
-    if want_sq:
-        local = local.withColumn("__lC2", F.sum(v * v).over(w_run))
-    local = local.persist()
-    baggs = [F.count(F.lit(1)).alias("__rows"),
-             F.sum(v).alias("__tot"),
-             F.count(v).alias("__nn")]
-    if want_sq:
-        baggs.append(F.sum(v * v).alias("__tot2"))
-    bounds = local.groupBy("__pid", *gcols).agg(*baggs)
-    w_off = (Window.partitionBy(*gcols).orderBy("__pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    osel = [
-        F.col("__pid").alias("__opid"),
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(gnames)],
-        F.coalesce(F.sum("__rows").over(w_off), F.lit(0)).alias("__orows"),
-        F.sum("__tot").over(w_off).alias("__osum"),
-        F.coalesce(F.sum("__nn").over(w_off), F.lit(0)).alias("__onn")]
-    if want_sq:
-        osel.append(F.sum("__tot2").over(w_off).alias("__osum2"))
-    offs = bounds.select(*osel)
-    cond = F.col("__pid") == F.col("__opid")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__og_{i}"))
-
     zero = _sum_zero(df, value)
 
-    def _null_aware(lc, oc):
-        return F.when(
-            F.col(lc).isNull() & F.col(oc).isNull(), F.lit(None)
-        ).otherwise(
-            F.coalesce(F.col(lc), zero) + F.coalesce(F.col(oc), zero))
+    def local(w):
+        run = _running(w)
+        cols = [("__lrn", F.row_number().over(w)),
+                ("__lC", F.sum(v).over(run)),
+                ("__lN", F.count(v).over(run))]
+        if want_sq:
+            cols.append(("__lC2", F.sum(v * v).over(run)))
+        return cols
 
-    out = (local.join(F.broadcast(offs), cond, "left")
-           .withColumn("__rn", (F.col("__lrn") + F.col("__orows")).cast("long"))
-           .withColumn("__C", _null_aware("__lC", "__osum"))
-           .withColumn("__N", (F.col("__lN") + F.col("__onn")).cast("long")))
-    drop = ["__pid", "__lrn", "__lC", "__lN", "__opid", "__orows",
-            "__osum", "__onn", *[f"__og_{i}" for i in range(len(gnames))]]
+    def carry(w):
+        cols = [("__orows", F.coalesce(F.sum("__rows").over(w), F.lit(0))),
+                ("__osum", F.sum("__tot").over(w)),
+                ("__onn", F.coalesce(F.sum("__nn").over(w), F.lit(0)))]
+        if want_sq:
+            cols.append(("__osum2", F.sum("__tot2").over(w)))
+        return cols
+
+    bounds = [F.count(F.lit(1)).alias("__rows"), F.sum(v).alias("__tot"),
+              F.count(v).alias("__nn")]
+    combine = [("__rn", (F.col("__lrn") + F.col("__orows")).cast("long")),
+               ("__C", _prefix_sum("__lC", "__osum", zero)),
+               ("__N", (F.col("__lN") + F.col("__onn")).cast("long"))]
     if want_sq:
-        out = out.withColumn("__C2", _null_aware("__lC2", "__osum2"))
-        drop += ["__lC2", "__osum2"]
-    out = out.drop(*drop)
-    return attach_cached(out, local)
+        bounds.append(F.sum(v * v).alias("__tot2"))
+        combine.append(("__C2", _prefix_sum("__lC2", "__osum2", zero)))
+    return _two_phase(df, gnames, order_by, num_partitions,
+                      local, bounds, carry, combine)
 
 
 def grouped_rolling_sum(
@@ -484,7 +465,7 @@ def grouped_rolling_sum(
     """Trailing ``window``-row rolling sum (or mean) per group in
     ``order_by`` order at few-huge-groups scale — ``GroupBy.rolling_sum``
     semantics (min_periods counts NON-NULL values in the frame, default
-    = window; every row emits).
+    = window; every row emits). One :func:`grouped_rolling_stats` stat.
 
     The per-group window form funnels each group through one task (the
     regime measured superlinear at sf100 for the fill/take family). Here
@@ -497,33 +478,10 @@ def grouped_rolling_sum(
     sum) — bit-differences vs the windowed form appear in the last ~2
     digits on 1e8-row groups; exact for integer-valued doubles below
     2^53 as always."""
-    if window is None or window < 1:
-        raise ValueError("window must be a positive int")
-    mp = window if min_periods is None else min_periods
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    out = out or f"{value}_rolling_{'mean' if mean else 'sum'}"
-    run = _grouped_running(df, gnames, order_by, value, num_partitions)
-    right = run.select(
-        *[F.col(g).alias(f"__jg_{i}") for i, g in enumerate(gnames)],
-        (F.col("__rn") + F.lit(window)).alias("__jrn"),
-        F.col("__C").alias("__Cp"), F.col("__N").alias("__Np"))
-    cond = F.col("__rn") == F.col("__jrn")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__jg_{i}"))
-    zero = _sum_zero(df, value)
-    n_in = F.col("__N") - F.coalesce("__Np", F.lit(0))
-    val = F.coalesce(F.col("__C"), zero) - F.coalesce(F.col("__Cp"), zero)
-    if mean:
-        # divide in double with the exact sum cast first — the shape the
-        # DuckDB oracle mirrors (CAST(s AS DOUBLE) / n); a no-op when the
-        # input is already double
-        val = val.cast("double") / n_in
-    guarded = F.when(n_in >= F.lit(max(mp, 1)), val)
-    joined = (run.join(right, cond, "left")
-              .withColumn(out, guarded)
-              .drop("__rn", "__C", "__N", "__jrn", "__Cp", "__Np",
-                    *[f"__jg_{i}" for i in range(len(gnames))]))
-    return joined
+    return grouped_rolling_stats(
+        df, group_by, order_by, value, window,
+        [("mean" if mean else "sum", out)], min_periods,
+        num_partitions=num_partitions)
 
 
 def grouped_rolling_stats(
@@ -543,10 +501,11 @@ def grouped_rolling_stats(
     exchanges and three persists for (r9: the chained form re-partitions
     the full frame per stat; this shares the running (C, N, C2) state).
     ``stats`` is a list of ``(stat, out_name)`` pairs (out_name None →
-    ``{value}_rolling_{stat}``). Same semantics, guards and — on the
-    DECIMAL input path — the same canonical double expression shapes as
-    the single-stat operators, so oracles written against those match
-    this op bit-for-bit."""
+    ``{value}_rolling_{stat}``). :func:`grouped_rolling_sum`, ``_mean``
+    and ``_var`` are single-stat calls of this operator. On the DECIMAL
+    input path the frame sums are exact differences, cast to double
+    before any division — the canonical double expression shapes the
+    DuckDB oracles mirror."""
     if window is None or window < 1:
         raise ValueError("window must be a positive int")
     stats = [(s, o or f"{value}_rolling_{s}") for s, o in stats]
@@ -555,19 +514,13 @@ def grouped_rolling_stats(
     if bad:
         raise ValueError(f"unsupported rolling stats: {sorted(bad)}")
     mp = window if min_periods is None else min_periods
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
+    gnames = _names(group_by)
     want_sq = bool({"var", "std"} & {s for s, _ in stats})
     run = _grouped_running(df, gnames, order_by, value, num_partitions,
                            want_sq=want_sq)
-    rsel = [*[F.col(g).alias(f"__jg_{i}") for i, g in enumerate(gnames)],
-            (F.col("__rn") + F.lit(window)).alias("__jrn"),
-            F.col("__C").alias("__Cp"), F.col("__N").alias("__Np")]
+    take = {"__C": "__Cp", "__N": "__Np"}
     if want_sq:
-        rsel.append(F.col("__C2").alias("__C2p"))
-    right = run.select(*rsel)
-    cond = F.col("__rn") == F.col("__jrn")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__jg_{i}"))
+        take["__C2"] = "__C2p"
     zero = _sum_zero(df, value)
     n_in = F.col("__N") - F.coalesce("__Np", F.lit(0))
     s_raw = F.coalesce(F.col("__C"), zero) - F.coalesce(F.col("__Cp"), zero)
@@ -576,7 +529,7 @@ def grouped_rolling_stats(
         s2d = (F.coalesce(F.col("__C2"), zero)
                - F.coalesce(F.col("__C2p"), zero)).cast("double")
     guard = n_in >= F.lit(max(mp, 1))
-    out_df = run.join(right, cond, "left")
+    outputs = []
     for stat, oname in stats:
         if stat == "count":
             # pandas rolling().count() respects min_periods (NaN below);
@@ -589,18 +542,16 @@ def grouped_rolling_stats(
         elif stat == "mean":
             expr = F.when(guard, sd / n_in)
         else:
+            # one-pass moments: (S2 − S·S/n)/(n − ddof), cancellation when
+            # var ≪ mean² (the keyed var aggregates' contract)
             num = F.greatest(s2d - sd * sd / n_in, F.lit(0.0))
             val = num / (n_in - F.lit(ddof))
             if stat == "std":
                 val = F.sqrt(val)
             expr = F.when(guard & (n_in > F.lit(ddof)), val)
-        out_df = out_df.withColumn(oname, expr)
-    drop = ["__rn", "__C", "__N", "__jrn", "__Cp", "__Np",
-            *[f"__jg_{i}" for i in range(len(gnames))]]
-    if want_sq:
-        drop += ["__C2", "__C2p"]
-    return attach_cached(out_df.drop(*drop),
-                         *getattr(run, "_pps_cached", ()))
+        outputs.append((oname, expr))
+    return _offset_join(run, gnames, "__rn", window, take, outputs,
+                        scratch=list(take))
 
 
 def _grouped_multi_cumsum(df, gnames, order_by, pairs, num_partitions):
@@ -608,50 +559,23 @@ def _grouped_multi_cumsum(df, gnames, order_by, pairs, num_partitions):
     range-partition pass (one exchange, one persist, one boundary frame
     with all the offsets) — ``pairs`` = [(value_col, out_col), ...].
     Same null semantics per column as grouped_cumsum."""
-    gcols = [F.col(c) for c in gnames]
-    ocols = _order_cols(order_by)
-    n = _resolve_partitions(df, num_partitions)
-    rp = df.repartitionByRange(n, *gcols, *ocols).withColumn(
-        "__pid", F.spark_partition_id())
-    # pinned after the running window: the window output has two
-    # consumers (the per-(pid, group) totals and the offset join below),
-    # and both must see the SAME sampled range boundaries (the two-branch
-    # hazard of grouped_cumsum's note). DISK_ONLY: this frame can be
-    # corpus-sized and each consumer reads it once more — on an 8g local
-    # heap a MEMORY_AND_DISK copy starves the downstream hash aggregates'
-    # execution pool (measured SparkOutOfMemoryError at 100M rows), while
-    # the disk round-trip is two sequential scans.
-    from pyspark import StorageLevel
-    w_local = (Window.partitionBy("__pid", *gcols).orderBy(*ocols)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    local = rp
-    for i, (vc, _) in enumerate(pairs):
-        local = local.withColumn(f"__mlc_{i}", F.sum(vc).over(w_local))
-    local = local.persist(StorageLevel.DISK_ONLY)
-    totals = local.groupBy("__pid", *gcols).agg(
-        *[F.sum(vc).alias(f"__mt_{i}") for i, (vc, _) in enumerate(pairs)])
-    w_off = (Window.partitionBy(*gcols).orderBy("__pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = totals.select(
-        F.col("__pid").alias("__opid"),
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(gnames)],
-        *[F.sum(f"__mt_{i}").over(w_off).alias(f"__mo_{i}")
-          for i in range(len(pairs))])
-    cond = F.col("__pid") == F.col("__opid")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__og_{i}"))
-    out = local.join(F.broadcast(offs), cond, "left")
-    for i, (vc, oc) in enumerate(pairs):
-        zero = _sum_zero(df, vc)
-        lc, off = F.col(f"__mlc_{i}"), F.col(f"__mo_{i}")
-        out = out.withColumn(oc, F.when(
-            lc.isNull() & off.isNull(), F.lit(None)
-        ).otherwise(F.coalesce(lc, zero) + F.coalesce(off, zero)))
-    out = out.drop("__pid", "__opid",
-                   *[f"__og_{i}" for i in range(len(gnames))],
-                   *[f"__mlc_{i}" for i in range(len(pairs))],
-                   *[f"__mo_{i}" for i in range(len(pairs))])
-    return attach_cached(out, local)
+    # DISK_ONLY pin: this frame can be corpus-sized and each of its two
+    # consumers reads it once more — on an 8g local heap a MEMORY_AND_DISK
+    # copy starves the downstream hash aggregates' execution pool
+    # (measured SparkOutOfMemoryError at 100M rows), while the disk
+    # round-trip is two sequential scans.
+    vals = list(enumerate(pairs))
+    return _two_phase(
+        df, gnames, order_by, num_partitions,
+        local=lambda w: [(f"__mlc_{i}", F.sum(vc).over(_running(w)))
+                         for i, (vc, _) in vals],
+        bounds=[F.sum(vc).alias(f"__mt_{i}") for i, (vc, _) in vals],
+        carry=lambda w: [(f"__mo_{i}", F.sum(f"__mt_{i}").over(w))
+                         for i, _ in vals],
+        combine=[(oc, _prefix_sum(f"__mlc_{i}", f"__mo_{i}",
+                                  _sum_zero(df, vc)))
+                 for i, (vc, oc) in vals],
+        storage=StorageLevel.DISK_ONLY)
 
 
 def grouped_rolling_time(
@@ -702,7 +626,7 @@ def grouped_rolling_time(
             f"grouped_rolling_time supports {sorted(allowed)}; got {sorted(bad)}")
     if min_periods < 1:
         raise ValueError("min_periods must be >= 1")
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
+    gnames = _names(group_by)
     v = F.col(value)
     # (1) per-(group, on) totals, then grouped running totals over the
     # distinct-timestamp frame (corpus-sized in the worst case — hence
@@ -785,20 +709,18 @@ def grouped_rolling_time(
             e = F.when(guard & (n_in > 1), vb / (n_in - F.lit(1)))
             expr = F.sqrt(e) if func == "std" else e
         outcols.append(expr.alias(name))
-    cached = getattr(run, "_pps_cached", ())
     if unique_on:
-        return attach_cached(
+        return _inherit(
             stats.select(*gnames, F.col(on),
-                         F.col("__vraw").alias(value), *outcols), *cached)
-    per_key = stats.select(
-        *[F.col(g).alias(f"__rg_{i}") for i, g in enumerate(gnames)],
-        F.col(on).alias("__ron"), *outcols)
-    jcond = F.col(on) == F.col("__ron")
-    for i, g in enumerate(gnames):
-        jcond = jcond & F.col(g).eqNullSafe(F.col(f"__rg_{i}"))
-    return attach_cached(
-        df.join(per_key, jcond, "left")
-        .drop("__ron", *[f"__rg_{i}" for i in range(len(gnames))]), *cached)
+                         F.col("__vraw").alias(value), *outcols), run)
+    rg, rg_names = _group_keys(gnames, "__rg_")
+    per_key = stats.select(*rg, F.col(on).alias("__ron"), *outcols)
+    return _inherit(
+        df.join(per_key,
+                _group_match(gnames, rg_names, F.col(on) == F.col("__ron")),
+                "left").drop("__ron", *rg_names), run)
+
+
 
 
 def grouped_rank(
@@ -840,7 +762,7 @@ def grouped_rank(
     (group, distinct-value) tie frame only — via the same fused
     :func:`_grouped_running` two-phase pass, so a corpus-sized tie
     frame (continuous values) still has no per-group funnel."""
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
+    gnames = _names(group_by)
     if methods is None:
         methods = [(method, pct, out or f"{value}_rank")]
     else:
@@ -852,6 +774,9 @@ def grouped_rank(
     vord = (v.asc_nulls_last() if ascending else v.desc_nulls_last())
     need_dense = any(m == "dense" for m, _, _ in methods)
     need_sizes = any(p for _, p, _ in methods)
+    tg, tg_names = _group_keys(gnames, "__tg_")
+    # value non-null on both sides at matches
+    tie_match = _group_match(gnames, tg_names, v == F.col("__tv"))
     if not any(m == "first" for m, _, _ in methods):
         cnt = (df.filter(v.isNotNull())
                .groupBy(*gnames, value)
@@ -859,61 +784,40 @@ def grouped_rank(
         run = _grouped_running(cnt, gnames, [vord], "__tcnt",
                                num_partitions)
         ties = run.select(
-            *[F.col(g).alias(f"__tg_{i}") for i, g in enumerate(gnames)],
-            F.col(value).alias("__tv"),
+            *tg, F.col(value).alias("__tv"),
             (F.col("__C") - F.col("__tcnt") + F.lit(1)).cast("long")
             .alias("__tmin"),
             F.col("__C").cast("long").alias("__tmax"),
             F.col("__rn").alias("__tdense"))
-        cond = v == F.col("__tv")
-        for i, g in enumerate(gnames):
-            cond = cond & F.col(g).eqNullSafe(F.col(f"__tg_{i}"))
-        joined = df.join(ties, cond, "left")
-        joined = _rank_exprs(joined, ties, gnames, methods, v, need_sizes,
-                             rrn=None)
-        out_df = joined.drop(
-            "__tmin", "__tmax", "__tv", "__tdense",
-            *[f"__tg_{i}" for i in range(len(gnames))],
-            *([f"__sg_{i}" for i in range(len(gnames))] + ["__gnn", "__gnd"]
-              if need_sizes else []))
-        return attach_cached(out_df, *getattr(run, "_pps_cached", ()))
+        joined = _rank_exprs(df.join(ties, tie_match, "left"), ties, gnames,
+                             methods, v, need_sizes, rrn=None)
+        return _inherit(
+            joined.drop("__tmin", "__tmax", "__tv", "__tdense", *tg_names),
+            run)
     order = [vord] + _order_cols(tiebreak)
     rn = grouped_row_number(df, gnames, order, out="__rrn",
                             num_partitions=num_partitions)
-    nnrows = rn.filter(v.isNotNull())
     if all(m == "first" and not p for m, p, _ in methods):
         out_df = rn
         for _, _, oname in methods:
             out_df = out_df.withColumn(
                 oname, F.when(v.isNotNull(), F.col("__rrn").cast("double")))
-        return out_df.drop("__rrn")
-    ties = nnrows.groupBy(*gnames, value).agg(
+        return _inherit(out_df.drop("__rrn"), rn)
+    ties = rn.filter(v.isNotNull()).groupBy(*gnames, value).agg(
         F.min("__rrn").alias("__tmin"), F.max("__rrn").alias("__tmax"))
     if need_dense:
         ties = grouped_row_number(
             ties, gnames, [vord], out="__tdense",
             num_partitions=num_partitions)
-    tsel = [*[F.col(g).alias(f"__tg_{i}") for i, g in enumerate(gnames)],
-            F.col(value).alias("__tv"), "__tmin", "__tmax"]
+    tcols = [*tg, F.col(value).alias("__tv"), "__tmin", "__tmax"]
     if need_dense:
-        tsel.append("__tdense")
-    ties = ties.select(*tsel)
-    cond = v == F.col("__tv")  # value non-null on both sides at matches
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__tg_{i}"))
-    joined = rn.join(ties, cond, "left")
-    joined = _rank_exprs(joined, ties, gnames, methods, v, need_sizes,
-                         rrn="__rrn")
-    drop = ["__rrn", "__tmin", "__tmax", "__tv",
-            *[f"__tg_{i}" for i in range(len(gnames))]]
-    if need_sizes:
-        drop += ["__gnn", "__gnd",
-                 *[f"__sg_{i}" for i in range(len(gnames))]]
-    if need_dense:
-        drop.append("__tdense")
-    return attach_cached(joined.drop(*drop),
-                         *getattr(rn, "_pps_cached", ()),
-                         *getattr(ties, "_pps_cached", ()))
+        tcols.append("__tdense")
+    tied = ties.select(*tcols)
+    joined = _rank_exprs(rn.join(tied, tie_match, "left"), tied, gnames,
+                         methods, v, need_sizes, rrn="__rrn")
+    return _inherit(
+        joined.drop("__rrn", "__tmin", "__tmax", "__tv", "__tdense",
+                    *tg_names), rn, ties)
 
 
 def _rank_exprs(joined, ties, gnames, methods, v, need_sizes, rrn):
@@ -923,20 +827,18 @@ def _rank_exprs(joined, ties, gnames, methods, v, need_sizes, rrn):
     the group's non-null count and count(*) its distinct count, so one
     tiny agg replaces a full corpus scan + two-phase count_distinct (r9:
     that corpus-side count_distinct was both the biggest codegen unit and
-    a second full-corpus exchange in this plan)."""
+    a second full-corpus exchange in this plan). The size columns are
+    dropped again here."""
+    sg_names = []
     if need_sizes:
-        sizes = (ties.groupBy(*[F.col(f"__tg_{i}")
-                                for i in range(len(gnames))])
+        tg_names = [f"__tg_{i}" for i in range(len(gnames))]
+        sg, sg_names = _group_keys(tg_names, "__sg_")
+        sizes = (ties.groupBy(*tg_names)
                  .agg(F.sum(F.col("__tmax") - F.col("__tmin") + F.lit(1))
                       .cast("long").alias("__gnn"),
                       F.count(F.lit(1)).alias("__gnd"))
-                 .select(*[F.col(f"__tg_{i}").alias(f"__sg_{i}")
-                           for i in range(len(gnames))], "__gnn", "__gnd"))
-        scond = None
-        for i, g in enumerate(gnames):
-            c = F.col(g).eqNullSafe(F.col(f"__sg_{i}"))
-            scond = c if scond is None else scond & c
-        joined = joined.join(sizes, scond, "left")
+                 .select(*sg, "__gnn", "__gnd"))
+        joined = joined.join(sizes, _group_match(gnames, sg_names), "left")
     for m, p, oname in methods:
         if m == "min":
             rank = F.col("__tmin").cast("double")
@@ -952,6 +854,8 @@ def _rank_exprs(joined, ties, gnames, methods, v, need_sizes, rrn):
             denom = F.col("__gnd") if m == "dense" else F.col("__gnn")
             rank = rank / denom
         joined = joined.withColumn(oname, F.when(v.isNotNull(), rank))
+    if need_sizes:
+        joined = joined.drop("__gnn", "__gnd", *sg_names)
     return joined
 
 
@@ -974,35 +878,16 @@ def grouped_cumminmax(
         raise ValueError("op must be 'min' or 'max'")
     agg = F.min if op == "min" else F.max
     pick = F.least if op == "min" else F.greatest
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    gcols = [F.col(c) for c in gnames]
-    ocols = _order_cols(order_by)
-    n = _resolve_partitions(df, num_partitions)
-    out = out or f"{value}_cum{op}"
-    rp = df.repartitionByRange(n, *gcols, *ocols).withColumn(
-        "__pid", F.spark_partition_id())
-    v = F.col(value)
-    w_run = (Window.partitionBy("__pid", *gcols).orderBy(*ocols)
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    # pinned: same two-branch boundary hazard as grouped_cumsum
-    local = rp.withColumn("__lm", agg(v).over(w_run)).persist()
-    bounds = local.groupBy("__pid", *gcols).agg(agg(v).alias("__bm"))
-    w_off = (Window.partitionBy(*gcols).orderBy("__pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bounds.select(
-        F.col("__pid").alias("__opid"),
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(gnames)],
-        agg("__bm").over(w_off).alias("__om"))
-    cond = F.col("__pid") == F.col("__opid")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__og_{i}"))
     # least/greatest skip nulls (SQL semantics), matching the window
     # aggregate: null iff no observation in the whole prefix
-    out_df = (local.join(F.broadcast(offs), cond, "left")
-              .withColumn(out, pick(F.col("__lm"), F.col("__om")))
-              .drop("__pid", "__lm", "__om", "__opid",
-                    *[f"__og_{i}" for i in range(len(gnames))]))
-    return attach_cached(out_df, local)
+    return _two_phase(
+        df, _names(group_by), order_by, num_partitions,
+        local=lambda w: [("__lm", agg(F.col(value))
+                          .over(_running(w)))],
+        bounds=[agg(F.col(value)).alias("__bm")],
+        carry=lambda w: [("__om", agg("__bm").over(w))],
+        combine=[(out or f"{value}_cum{op}",
+                  pick(F.col("__lm"), F.col("__om")))])
 
 
 def grouped_rolling_var(
@@ -1021,43 +906,13 @@ def grouped_rolling_var(
     scale — the :func:`grouped_rolling_sum` prefix-difference join with
     the sum-of-squares component carried too: over the frame,
     n = N_t − N_{t−w}, S = C_t − C_{t−w}, S2 = C2_t − C2_{t−w},
-    var = (S2 − S²/n)/(n − ddof). Same one-pass-moment precision
-    contract as the keyed var aggregates (cancellation when
-    var ≪ mean²) stacked on the prefix-difference contract."""
-    if window is None or window < 1:
-        raise ValueError("window must be a positive int")
-    mp = window if min_periods is None else min_periods
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    out = out or f"{value}_rolling_{'std' if std else 'var'}"
-    run = _grouped_running(df, gnames, order_by, value, num_partitions,
-                           want_sq=True)
-    right = run.select(
-        *[F.col(g).alias(f"__jg_{i}") for i, g in enumerate(gnames)],
-        (F.col("__rn") + F.lit(window)).alias("__jrn"),
-        F.col("__C").alias("__Cp"), F.col("__N").alias("__Np"),
-        F.col("__C2").alias("__C2p"))
-    cond = F.col("__rn") == F.col("__jrn")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__jg_{i}"))
-    zero = _sum_zero(df, value)
-    n_in = F.col("__N") - F.coalesce("__Np", F.lit(0))
-    # frame sums are exact on the decimal path; all division/cancellation
-    # arithmetic happens in double with the sums cast FIRST — the canonical
-    # var shape (S2 − S·S/n)/(n − ddof) the DuckDB oracle reproduces
-    s = (F.coalesce(F.col("__C"), zero)
-         - F.coalesce(F.col("__Cp"), zero)).cast("double")
-    s2 = (F.coalesce(F.col("__C2"), zero)
-          - F.coalesce(F.col("__C2p"), zero)).cast("double")
-    num = F.greatest(s2 - s * s / n_in, F.lit(0.0))
-    val = num / (n_in - F.lit(ddof))
-    if std:
-        val = F.sqrt(val)
-    guarded = F.when(
-        (n_in >= F.lit(max(mp, 1))) & (n_in > F.lit(ddof)), val)
-    return (run.join(right, cond, "left")
-            .withColumn(out, guarded)
-            .drop("__rn", "__C", "__N", "__C2", "__jrn", "__Cp", "__Np",
-                  "__C2p", *[f"__jg_{i}" for i in range(len(gnames))]))
+    var = (S2 − S²/n)/(n − ddof). One :func:`grouped_rolling_stats`
+    stat. Same one-pass-moment precision contract as the keyed var
+    aggregates (cancellation when var ≪ mean²) stacked on the
+    prefix-difference contract."""
+    return grouped_rolling_stats(
+        df, group_by, order_by, value, window,
+        [("std" if std else "var", out)], min_periods, ddof, num_partitions)
 
 
 def grouped_expanding(
@@ -1085,9 +940,8 @@ def grouped_expanding(
     if bad:
         raise ValueError(f"unsupported expanding stats: {sorted(bad)}")
     want_sq = bool({"var", "std"} & set(stats))
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    run = _grouped_running(df, gnames, order_by, value, num_partitions,
-                           want_sq=want_sq)
+    run = _grouped_running(df, _names(group_by), order_by, value,
+                           num_partitions, want_sq=want_sq)
     n_obs = F.col("__N")
     guard = n_obs >= F.lit(max(min_periods, 1))
     # prefix sums are exact on the decimal path; divisions happen in double
@@ -1110,7 +964,7 @@ def grouped_expanding(
                 val = F.sqrt(val)
         out = out.withColumn(f"{value}_expanding_{stat}",
                              F.when(guard, val))
-    return out.drop("__rn", "__C", "__N", "__C2")
+    return _inherit(out.drop("__rn", "__C", "__N", "__C2"), run)
 
 
 def grouped_shift(
@@ -1128,21 +982,11 @@ def grouped_shift(
     self-join fetches the partner row's value — no per-group lag window,
     parallelism = partition count, any |n| (a lag window's task must
     hold the whole group regardless of n)."""
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    out = out or f"{value}_shift"
+    gnames = _names(group_by)
     rn = grouped_row_number(df, gnames, order_by, out="__srn",
                             num_partitions=num_partitions)
-    right = rn.select(
-        *[F.col(g).alias(f"__sg_{i}") for i, g in enumerate(gnames)],
-        (F.col("__srn") + F.lit(n)).alias("__sjrn"),
-        F.col(value).alias("__sval"))
-    cond = F.col("__srn") == F.col("__sjrn")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__sg_{i}"))
-    return (rn.join(right, cond, "left")
-            .withColumn(out, F.col("__sval"))
-            .drop("__srn", "__sjrn", "__sval",
-                  *[f"__sg_{i}" for i in range(len(gnames))]))
+    return _offset_join(rn, gnames, "__srn", n, {value: "__sval"},
+                        [(out or f"{value}_shift", F.col("__sval"))])
 
 
 def grouped_rolling_mean(
@@ -1156,8 +1000,9 @@ def grouped_rolling_mean(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Trailing rolling mean per group — see :func:`grouped_rolling_sum`."""
-    return grouped_rolling_sum(df, group_by, order_by, value, window,
-                               min_periods, out, num_partitions, mean=True)
+    return grouped_rolling_stats(df, group_by, order_by, value, window,
+                                 [("mean", out)], min_periods,
+                                 num_partitions=num_partitions)
 
 
 _PAIR_SUMS = ("Sx", "Sy", "Sxy", "Sxx", "Syy")
@@ -1178,9 +1023,6 @@ def _grouped_running_pair(df, gnames, order_by, x: str, y: str,
     dyadic fixture keeps every sum exact anyway), so the
     partition-boundary offset merge is a plain coalesce-to-zero add —
     every emitted sum rides under the caller's pair-count guard."""
-    gcols = [F.col(c) for c in gnames]
-    ocols = _order_cols(order_by)
-    n = _resolve_partitions(df, num_partitions)
     xc, yc = F.col(x).cast("double"), F.col(y).cast("double")
     both = xc.isNotNull() & yc.isNotNull()
     # r15 numerical robustness: per-group pair-complete min anchors,
@@ -1191,62 +1033,45 @@ def _grouped_running_pair(df, gnames, order_by, x: str, y: str,
     # the few-huge-groups premise of this module — and is BROADCAST so
     # the corpus-side range partitioning is untouched (an unhinted
     # equi-join would reshuffle the corpus by group and defeat the
-    # repartitionByRange below).
-    anchors = df.groupBy(*gcols).agg(
+    # range partitioning of the pass).
+    ag, ag_names = _group_keys(gnames, "__ag_")
+    anchors = df.groupBy(*gnames).agg(
         F.min(F.when(both, xc)).alias("__ax"),
-        F.min(F.when(both, yc)).alias("__ay")).select(
-        *[F.col(g).alias(f"__ag_{i}") for i, g in enumerate(gnames)],
-        "__ax", "__ay")
-    acond = F.lit(True)
-    for i, g in enumerate(gnames):
-        acond = acond & F.col(g).eqNullSafe(F.col(f"__ag_{i}"))
-    rp = (df.join(F.broadcast(anchors), acond, "left")
-          .drop(*[f"__ag_{i}" for i in range(len(gnames))])
-          .repartitionByRange(n, *gcols, *ocols)
-          .withColumn("__pid", F.spark_partition_id()))
+        F.min(F.when(both, yc)).alias("__ay")).select(*ag, "__ax", "__ay")
+    anchored = (df.join(F.broadcast(anchors),
+                        _group_match(gnames, ag_names), "left")
+                .drop(*ag_names))
     qx, qy = xc - F.col("__ax"), yc - F.col("__ay")
     comps = {"Sx": F.when(both, qx), "Sy": F.when(both, qy),
              "Sxy": F.when(both, qx * qy), "Sxx": F.when(both, qx * qx),
              "Syy": F.when(both, qy * qy)}
-    w_run = (Window.partitionBy("__pid", *gcols).orderBy(*ocols)
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_rn = Window.partitionBy("__pid", *gcols).orderBy(*ocols)
-    local = (rp.withColumn("__lrn", F.row_number().over(w_rn))
-             .withColumn("__lN",
-                         F.count(F.when(both, F.lit(1))).over(w_run)))
-    for k in _PAIR_SUMS:
-        local = local.withColumn(f"__l{k}", F.sum(comps[k]).over(w_run))
-    local = local.persist()
-    bounds = local.groupBy("__pid", *gcols).agg(
-        F.count(F.lit(1)).alias("__rows"),
-        F.count(F.when(both, F.lit(1))).alias("__nn"),
-        *[F.sum(comps[k]).alias(f"__t{k}") for k in _PAIR_SUMS])
-    w_off = (Window.partitionBy(*gcols).orderBy("__pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = bounds.select(
-        F.col("__pid").alias("__opid"),
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(gnames)],
-        F.coalesce(F.sum("__rows").over(w_off), F.lit(0)).alias("__orows"),
-        F.coalesce(F.sum("__nn").over(w_off), F.lit(0)).alias("__onn"),
-        *[F.coalesce(F.sum(f"__t{k}").over(w_off), F.lit(0.0))
-          .alias(f"__o{k}") for k in _PAIR_SUMS])
-    cond = F.col("__pid") == F.col("__opid")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__og_{i}"))
-    out = (local.join(F.broadcast(offs), cond, "left")
-           .withColumn("__rn",
-                       (F.col("__lrn") + F.col("__orows")).cast("long"))
-           .withColumn("__N", (F.col("__lN") + F.col("__onn")).cast("long")))
-    for k in _PAIR_SUMS:
-        out = out.withColumn(
-            f"__{k}", F.coalesce(F.col(f"__l{k}"), F.lit(0.0))
-            + F.col(f"__o{k}"))
-    drop = (["__pid", "__lrn", "__lN", "__opid", "__orows", "__onn",
-             "__ax", "__ay"]
-            + [f"__l{k}" for k in _PAIR_SUMS]
-            + [f"__o{k}" for k in _PAIR_SUMS]
-            + [f"__og_{i}" for i in range(len(gnames))])
-    return attach_cached(out.drop(*drop), local)
+    n_pairs = F.count(F.when(both, F.lit(1)))
+
+    def local(w):
+        run = _running(w)
+        return [("__lrn", F.row_number().over(w)),
+                ("__lN", n_pairs.over(run)),
+                *[(f"__l{k}", F.sum(comps[k]).over(run)) for k in _PAIR_SUMS]]
+
+    def carry(w):
+        return [("__orows", F.coalesce(F.sum("__rows").over(w), F.lit(0))),
+                ("__onn", F.coalesce(F.sum("__nn").over(w), F.lit(0))),
+                *[(f"__o{k}", F.coalesce(F.sum(f"__t{k}").over(w), F.lit(0.0)))
+                  for k in _PAIR_SUMS]]
+
+    # partition count from the input's size, not the anchor join's estimate
+    run = _two_phase(
+        anchored, gnames, order_by, _resolve_partitions(df, num_partitions),
+        local,
+        bounds=[F.count(F.lit(1)).alias("__rows"), n_pairs.alias("__nn"),
+                *[F.sum(comps[k]).alias(f"__t{k}") for k in _PAIR_SUMS]],
+        carry=carry,
+        combine=[
+            ("__rn", (F.col("__lrn") + F.col("__orows")).cast("long")),
+            ("__N", (F.col("__lN") + F.col("__onn")).cast("long")),
+            *[(f"__{k}", F.coalesce(F.col(f"__l{k}"), F.lit(0.0))
+               + F.col(f"__o{k}")) for k in _PAIR_SUMS]])
+    return _inherit(run.drop("__ax", "__ay"), run)
 
 
 def _grouped_rolling_pair(df, group_by, order_by, x, y, window,
@@ -1260,17 +1085,9 @@ def _grouped_rolling_pair(df, group_by, order_by, x, y, window,
     if window is None or window < 1:
         raise ValueError("window must be a positive int")
     mp = window if min_periods is None else min_periods
-    gnames = [group_by] if isinstance(group_by, str) else list(group_by)
-    out = out or f"{x}_{y}_rolling_{stat}"
+    gnames = _names(group_by)
     run = _grouped_running_pair(df, gnames, order_by, x, y, num_partitions)
-    right = run.select(
-        *[F.col(g).alias(f"__jg_{i}") for i, g in enumerate(gnames)],
-        (F.col("__rn") + F.lit(window)).alias("__jrn"),
-        F.col("__N").alias("__Np"),
-        *[F.col(f"__{k}").alias(f"__{k}p") for k in _PAIR_SUMS])
-    cond = F.col("__rn") == F.col("__jrn")
-    for i, g in enumerate(gnames):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__jg_{i}"))
+    take = {f"__{k}": f"__{k}p" for k in ("N", *_PAIR_SUMS)}
     n_in = F.col("__N") - F.coalesce("__Np", F.lit(0))
     d = {k: F.col(f"__{k}") - F.coalesce(F.col(f"__{k}p"), F.lit(0.0))
          for k in _PAIR_SUMS}
@@ -1284,15 +1101,9 @@ def _grouped_rolling_pair(df, group_by, order_by, x, y, window,
         vx = d["Sxx"] - d["Sx"] * d["Sx"] / nn
         vy = d["Syy"] - d["Sy"] * d["Sy"] / nn
         val = F.when(guard & (vx > 0) & (vy > 0), num / F.sqrt(vx * vy))
-    drop = (["__rn", "__N", "__jrn", "__Np"]
-            + [f"__{k}" for k in _PAIR_SUMS]
-            + [f"__{k}p" for k in _PAIR_SUMS]
-            + [f"__jg_{i}" for i in range(len(gnames))])
-    # the _pps_cached handle on `run` does not survive .join(); re-attach
-    # so release_cached on the result can free the prefix-pass persist.
-    return attach_cached(
-        run.join(right, cond, "left").withColumn(out, val).drop(*drop),
-        *getattr(run, "_pps_cached", ()))
+    return _offset_join(run, gnames, "__rn", window, take,
+                        [(out or f"{x}_{y}_rolling_{stat}", val)],
+                        scratch=list(take))
 
 
 def grouped_rolling_cov(
@@ -1353,7 +1164,7 @@ def global_ffill(
     tagged = df.withColumn("__gall", F.lit(1))
     out_df = grouped_ffill(tagged, ["__gall"], order_by, value, out=out,
                            num_partitions=num_partitions, backward=backward)
-    return out_df.drop("__gall")
+    return _inherit(out_df.drop("__gall"), out_df)
 
 
 def global_rolling_sum(
@@ -1372,7 +1183,7 @@ def global_rolling_sum(
     out_df = grouped_rolling_sum(tagged, ["__gall"], order_by, value,
                                  window, min_periods, out,
                                  num_partitions, mean=mean)
-    return out_df.drop("__gall")
+    return _inherit(out_df.drop("__gall"), out_df)
 
 
 def global_rank_cumsum(
@@ -1389,33 +1200,18 @@ def global_rank_cumsum(
     fused, both per-partition computations and both prefix offsets come
     from a single partitioning and a single one-row-per-partition frame).
     """
-    rp, cols = _ranged(df, order_by, num_partitions)
     v = F.col(value) if isinstance(value, str) else value
-    w_row = Window.partitionBy("__pid").orderBy(*cols)
-    w_cum = w_row.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # pinned: same two-branch boundary-divergence hazard as global_row_number
-    local = (rp.withColumn("__lrn", F.row_number().over(w_row))
-             .withColumn("__lcum", F.sum(v).over(w_cum)).persist())
-    per_pid = local.groupBy("__pid").agg(
-        F.count(F.lit(1)).alias("__cnt"), F.sum(v).alias("__tot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = per_pid.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__rnoff"),
-        F.sum("__tot").over(w_off).alias("__cumoff"))
-    cum = F.when(
-        F.col("__lcum").isNull() & F.col("__cumoff").isNull(), F.lit(None)
-    ).otherwise(
-        F.coalesce(F.col("__lcum"), F.lit(0))
-        + F.coalesce(F.col("__cumoff"), F.lit(0))
-    )
-    out = (
-        local.join(F.broadcast(offs), "__pid")
-        .withColumn(rank_out, (F.col("__lrn") + F.col("__rnoff")).cast("long"))
-        .withColumn(cum_out, cum)
-        .drop("__pid", "__lrn", "__lcum", "__rnoff", "__cumoff")
-    )
-    return attach_cached(out, local)
+    return _two_phase(
+        df, [], order_by, num_partitions,
+        local=lambda w: [("__lrn", F.row_number().over(w)),
+                         ("__lcum", F.sum(v).over(_running(w)))],
+        bounds=[F.count(F.lit(1)).alias("__cnt"), F.sum(v).alias("__tot")],
+        carry=lambda w: [
+            ("__rnoff", F.coalesce(F.sum("__cnt").over(w), F.lit(0))),
+            ("__cumoff", F.sum("__tot").over(w))],
+        combine=[
+            (rank_out, (F.col("__lrn") + F.col("__rnoff")).cast("long")),
+            (cum_out, _prefix_sum("__lcum", "__cumoff", F.lit(0)))])
 
 
 def global_shift(
@@ -1439,11 +1235,7 @@ def global_shift(
     shifted = base.select(
         (F.col("__grn") + F.lit(n)).alias("__grn"),
         *[F.col(c).alias(f"{c}{suffix}") for c in cols])
-    # the _pps_cached handle on `base` does not survive .join(); re-attach so
-    # release_cached on the result frees global_row_number's pinned persist
-    return attach_cached(
-        base.join(shifted, "__grn", "left").drop("__grn"),
-        *getattr(base, "_pps_cached", ()))
+    return _inherit(base.join(shifted, "__grn", "left").drop("__grn"), base)
 
 
 def global_ntile(
@@ -1473,9 +1265,7 @@ def global_ntile(
     ).otherwise(
         r + F.when(q > 0, ((rn - big + q - 1) / q).cast("long")).otherwise(F.lit(0))
     )
-    # re-attach the persist handle lost through .crossJoin (see global_shift)
-    return attach_cached(
+    return _inherit(
         base.crossJoin(F.broadcast(cnt))
         .withColumn(out, tile.cast("int"))
-        .drop("__grn", "__n"),
-        *getattr(base, "_pps_cached", ()))
+        .drop("__grn", "__n"), base)

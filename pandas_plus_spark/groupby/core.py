@@ -185,9 +185,11 @@ class GroupBy:
     partition count: ``grouped_cumsum``, ``grouped_cumminmax``,
     ``grouped_ffill`` (+``backward=``), ``grouped_shift``,
     ``grouped_row_number``/``grouped_take``, ``grouped_rolling_sum/
-    _mean/_var``, ``grouped_expanding``, ``grouped_rank``. ``ewm_*``
-    need no twin — the scan path has no per-group window. Prefer the
-    twins when the group count is far below the cluster's parallelism.
+    _mean/_var`` (single-stat calls of ``grouped_rolling_stats``, which
+    computes several rolling stats in one pass), ``grouped_expanding``,
+    ``grouped_rank``. ``ewm_*`` need no twin — the scan path has no
+    per-group window. Prefer the twins when the group count is far below
+    the cluster's parallelism.
     """
 
     def __init__(

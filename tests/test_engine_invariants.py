@@ -8,6 +8,10 @@
    BaseException`` or bare ``except`` is listed in :data:`BROAD_EXCEPT`
    with the reason it must stay broad. Everything else catches the types
    it expects (``Py4JError``, ``KeyError``, ...).
+3. One two-phase pass: in ``functions/ordered.py`` the range partitioning
+   (``repartitionByRange``) and the pin (``.persist(``) are each called in
+   exactly one place, the helper :data:`TWO_PHASE` names, so the
+   pin → boundary → carry → join skeleton is not copied again.
 """
 
 import ast
@@ -24,6 +28,10 @@ BROAD_EXCEPT = {
 }
 
 _BROAD = {"Exception", "BaseException"}
+
+#: (module, function) that alone range-partitions and pins in that module
+TWO_PHASE = ("pandas_plus_spark.functions.ordered", "_two_phase")
+_SKELETON = ("repartitionByRange", "persist")
 
 
 def _modules():
@@ -81,6 +89,16 @@ def _broad_excepts(mod, tree):
             if isinstance(node, ast.ExceptHandler) and _is_broad(node)]
 
 
+def _call_sites(tree, methods):
+    """method name -> enclosing function of each call of it, in order."""
+    sites = {m: [] for m in methods}
+    for node, func in _walk_with_function(tree):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr in sites):
+            sites[node.func.attr].append(func)
+    return sites
+
+
 def test_no_module_level_boolean_toggles():
     found = [hit for mod, tree in _modules()
              for hit in _toggle_tests(mod, tree)]
@@ -123,3 +141,25 @@ def test_broad_except_check_sees_bare_tuple_and_base():
         "try:\n    pass\nexcept BaseException:\n    pass\n")
     assert _broad_excepts("m", tree) == [
         (("m", "f"), 4), (("m", "g"), 9), (("m", None), 17)]
+
+
+def test_ordered_skeleton_lives_in_one_helper():
+    mod, helper = TWO_PHASE
+    tree = dict(_modules())[mod]
+    sites = _call_sites(tree, _SKELETON)
+    assert sites == {m: [helper] for m in _SKELETON}, (
+        f"{mod}: range partitioning and pinning belong in {helper} only; "
+        f"pass the window columns, boundary aggregates and combine "
+        f"expressions to it instead: {sites}")
+
+
+def test_skeleton_check_sees_every_call_site():
+    tree = ast.parse(
+        "def _two_phase(df):\n"
+        "    return df.repartitionByRange(2, 'k').persist()\n"
+        "def op(df, level):\n"
+        "    return df.persist(level)\n"
+        "x = df.repartitionByRange(3)\n")
+    assert _call_sites(tree, _SKELETON) == {
+        "repartitionByRange": ["_two_phase", None],
+        "persist": ["_two_phase", "op"]}

@@ -118,40 +118,109 @@ class TestRewiredCallers:
         assert "Window" not in plan  # scalar agg + broadcast, not a window
 
 
+#: one case per public operator of functions.ordered (grouped_rank once per
+#: arm: all 'first', no 'first' and the dense tie numbering). Frame: k
+#: order, g group, v/w values, t time.
+_HANDLE_CASES = {
+    "global_row_number": lambda o, d, n: o.global_row_number(
+        d, "k", num_partitions=n),
+    "global_cumsum": lambda o, d, n: o.global_cumsum(
+        d, "k", "v", num_partitions=n),
+    "global_rank_cumsum": lambda o, d, n: o.global_rank_cumsum(
+        d, "k", "v", num_partitions=n),
+    "global_shift": lambda o, d, n: o.global_shift(
+        d, "k", "v", num_partitions=n),
+    "global_ntile": lambda o, d, n: o.global_ntile(
+        d, "k", 4, num_partitions=n),
+    "global_ffill": lambda o, d, n: o.global_ffill(
+        d, "k", "v", num_partitions=n),
+    "global_rolling_sum": lambda o, d, n: o.global_rolling_sum(
+        d, "k", "v", 3, num_partitions=n),
+    "grouped_cumsum": lambda o, d, n: o.grouped_cumsum(
+        d, "g", "k", "v", num_partitions=n),
+    "grouped_row_number": lambda o, d, n: o.grouped_row_number(
+        d, "g", "k", size="sz", num_partitions=n),
+    "grouped_take": lambda o, d, n: o.grouped_take(
+        d, "g", "k", [0, -1], num_partitions=n),
+    "grouped_ffill": lambda o, d, n: o.grouped_ffill(
+        d, "g", "k", "v", num_partitions=n),
+    "grouped_cumminmax": lambda o, d, n: o.grouped_cumminmax(
+        d, "g", "k", "v", num_partitions=n),
+    "grouped_shift": lambda o, d, n: o.grouped_shift(
+        d, "g", "k", "v", num_partitions=n),
+    "grouped_expanding": lambda o, d, n: o.grouped_expanding(
+        d, "g", "k", "v", stats=("mean", "var"), num_partitions=n),
+    "grouped_rolling_sum": lambda o, d, n: o.grouped_rolling_sum(
+        d, "g", "k", "v", 3, num_partitions=n),
+    "grouped_rolling_mean": lambda o, d, n: o.grouped_rolling_mean(
+        d, "g", "k", "v", 3, num_partitions=n),
+    "grouped_rolling_var": lambda o, d, n: o.grouped_rolling_var(
+        d, "g", "k", "v", 3, num_partitions=n),
+    "grouped_rolling_stats": lambda o, d, n: o.grouped_rolling_stats(
+        d, "g", "k", "v", 3, num_partitions=n),
+    "grouped_rolling_cov": lambda o, d, n: o.grouped_rolling_cov(
+        d, "g", "k", "v", "w", 3, num_partitions=n),
+    "grouped_rolling_corr": lambda o, d, n: o.grouped_rolling_corr(
+        d, "g", "k", "v", "w", 3, num_partitions=n),
+    "grouped_rolling_time": lambda o, d, n: o.grouped_rolling_time(
+        d, "g", "t", "v", 5.0, num_partitions=n),
+    "grouped_rank[first]": lambda o, d, n: o.grouped_rank(
+        d, "g", "k", "v", method="first", num_partitions=n),
+    "grouped_rank[average]": lambda o, d, n: o.grouped_rank(
+        d, "g", "k", "v", num_partitions=n),
+    "grouped_rank[first+dense]": lambda o, d, n: o.grouped_rank(
+        d, "g", "k", "v", num_partitions=n,
+        methods=[("first", False, "r1"), ("dense", True, "r2")]),
+}
+
+
 class TestCacheHandlePropagation:
-    """join()/crossJoin() drop the _pps_cached attribute; every ordered
-    operator must re-attach it so release_cached frees the pinned persist
-    (a leaked handle pins whole-input storage until session end)."""
+    """Every public operator pins its range-partitioned frame with
+    persist(); a trailing join/withColumn/filter/drop returns a frame
+    without the _pps_cached handle, so each operator must re-attach it —
+    otherwise release_cached frees nothing and the pin holds whole-input
+    storage until session end."""
 
-    def test_shift_and_ntile_carry_handles(self, frame):
+    @pytest.fixture(scope="class")
+    def hframe(self, spark):
+        rows = [(i, ["a", "b", None][i % 3], float(i % 7) if i % 5 else None,
+                 float(i % 4), float(i // 2)) for i in range(120)]
+        return spark.createDataFrame(
+            rows, "k long, g string, v double, w double, t double")
+
+    def test_every_operator_has_a_case(self):
+        import inspect
+
+        import pandas_plus_spark.functions.ordered as o
+        public = {name for name, f in vars(o).items()
+                  if inspect.isfunction(f) and not name.startswith("_")
+                  and f.__module__ == o.__name__}
+        assert public == {c.split("[")[0] for c in _HANDLE_CASES}
+
+    # a distinct num_partitions per case: Spark's CacheManager is keyed by
+    # logical plan, so plan-identical intermediates of two cases would
+    # share one cache entry and the first release would evict both — a
+    # test artifact, not an operator bug
+    @pytest.mark.parametrize("n, case", list(enumerate(_HANDLE_CASES, 2)),
+                             ids=list(_HANDLE_CASES))
+    def test_release_frees_the_pins(self, spark, hframe, n, case):
+        import pandas_plus_spark.functions.ordered as o
         from pandas_plus_spark.util import release_cached
-        # one at a time, distinct num_partitions per op: Spark's CacheManager
-        # is keyed by logical plan, so plan-identical intermediates from two
-        # live operators would share one cache entry and the first release
-        # would evict both — a test artifact, not an operator bug.
-        makers = [
-            lambda: global_shift(frame, "k", "v", num_partitions=4),
-            lambda: global_ntile(frame, "k", 4, num_partitions=5),
-            lambda: global_row_number(frame, "k", num_partitions=6),
-            lambda: global_cumsum(frame, "k", "v", num_partitions=7),
-        ]
-        def pinned(h):
-            # r16: the pin is a lineage cut (checkpoint blocks on
-            # _pps_ckpt_rdd), not a CacheManager entry
-            rdd = getattr(h, "_pps_ckpt_rdd", None)
-            if rdd is not None:
-                lvl = rdd.getStorageLevel()
-                return lvl.useMemory() or lvl.useDisk()
-            return h.storageLevel.useMemory
+        cached = spark._jsparkSession.sharedState().cacheManager().cachedData
+        before = cached().size()
+        out = _HANDLE_CASES[case](o, hframe, n)
+        handles = list(getattr(out, "_pps_cached", ()))
+        assert handles, "result lost the handles of its pinned frames"
+        out.count()
 
-        for make in makers:
-            out = make()
-            handles = getattr(out, "_pps_cached", ())
-            assert len(handles) >= 1
-            out.count()
-            assert any(pinned(h) for h in handles)
-            release_cached(out)
-            assert not any(pinned(h) for h in handles)
+        def pinned(h):
+            lvl = h.storageLevel
+            return lvl.useMemory or lvl.useDisk
+
+        assert any(pinned(h) for h in handles)
+        release_cached(out)
+        assert not any(pinned(h) for h in handles)
+        assert cached().size() == before, "a pinned frame outlived release"
 
 
 class TestGlobalRankCumsum:

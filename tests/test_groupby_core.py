@@ -1206,6 +1206,43 @@ class TestEwmMean:
         exchange = names.index("Exchange")
         assert names[:exchange].count("Sort") == 2, final
 
+    def test_scan_carry_is_the_previous_chunk_total(self, spark,
+                                                    monkeypatch):
+        """The lag-1 carry ``__pn`` of every row equals the total of the
+        weighted values ``__z`` over its group's previous chunk, summed
+        independently here (NULL in a group's first chunk) — on shuffled
+        input with several multi-row chunks per group and some nulls."""
+        import numpy as np
+        import pandas as pd
+        n = 900  # 3 groups x 300 rows; alpha=0.5 -> L=57, 6 chunks/group
+        rng = np.random.default_rng(3)
+        v = rng.standard_normal(n)
+        v[rng.random(n) < 0.1] = np.nan
+        pdf = pd.DataFrame({"k": np.arange(n) % 3, "o": np.arange(n),
+                            "v": v}).sample(frac=1.0, random_state=5)
+        sdf = spark.createDataFrame(pdf)
+        # keep the scan's carry, chunk id and weighted values in the output
+        keep = {"__pn", "__c_v", "__z_v"}
+        real_drop = type(sdf).drop
+        monkeypatch.setattr(type(sdf), "drop", lambda self, *cols: real_drop(
+            self, *[c for c in cols if not (isinstance(c, str) and c in keep)]))
+        out = (GroupBy(sdf, "k", order_by="o")
+               .ewm_mean("v", alpha=0.5, method="scan"))
+        monkeypatch.undo()
+        prev = (out.groupBy("k", "__c_v").agg(F.sum("__z_v").alias("want"))
+                .withColumn("__c_v", F.col("__c_v") + 1))
+        rows = (out.join(prev, ["k", "__c_v"], "left")
+                .select("k", "__c_v", "__pn", "want").collect())
+        assert len(rows) == n
+        # (subscripts: r.__pn would be name-mangled inside the class)
+        assert {(r["k"], r["__c_v"]) for r in rows} == {
+            (k, c) for k in range(3) for c in range(6)}
+        for r in rows:
+            if r["__c_v"] == 0:
+                assert r["__pn"] is None and r["want"] is None, r
+            else:
+                assert r["__pn"] == pytest.approx(r["want"], rel=1e-12), r
+
 
 class TestRankMethods:
     def test_all_methods_match_pandas(self, spark):
